@@ -7,6 +7,8 @@ reviewer verifying behavioral parity to a file that is not there."""
 import re
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 # ':'-excluded so trailing ``:NN`` / ``:NN-MM`` line ranges drop off.
 _CITE = re.compile(r"/root/reference/[A-Za-z0-9_./-]+")
@@ -28,6 +30,10 @@ def _py_files():
             yield from sorted(root.rglob("*.py"))
 
 
+@pytest.mark.skipif(
+    not Path("/root/reference").is_dir(),
+    reason="reference snapshot /root/reference is not present",
+)
 def test_all_cited_reference_paths_exist():
     missing = []
     for py in _py_files():
