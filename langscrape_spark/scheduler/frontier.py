@@ -7,10 +7,18 @@ killed run resumes exactly (SURVEY.md §7 Phase 2/3).
 
 Scale design (the parts that must survive 1000 executors / 10^10 urls):
 
-- **Seen-set membership**: candidates are explicitly repartitioned by
-  ``xxhash64(url)`` before a ``left_anti`` join against the seen table
-  (north rule: "explicit repartitioning by url-hash before membership
-  checks"). A JVM-side bloom filter built from the seen table
+- **Seen-set membership**: candidates and the seen table are both
+  explicitly repartitioned with ``repartition(n, url)`` before a
+  ``left_anti`` join (north rule: "explicit repartitioning by url-hash
+  before membership checks"). Partitioning on the join key column is
+  what lets the join reuse the exchange: the cached candidates are not
+  shuffled again and the seen set is shuffled once per round. (The
+  earlier ``repartition(n, xxhash64(url))`` partitioned on an
+  expression, which does not satisfy the join's clustering on ``url``,
+  so the planner shuffled both sides a second time.) ``n`` is
+  ``seen_partitions`` capped at the task-slot count, so a round is one
+  wave of tasks and writes at most ``n`` files per seen delta.
+  A JVM-side bloom filter built from the seen table
   (``bloom_filter_agg`` / ``might_contain``) pre-filters candidates so
   the exact anti-join shuffles only probable-new urls; the bloom's
   false positives are removed by the anti-join, so admission is exact.
@@ -67,8 +75,8 @@ class CrawlConfig:
     bloom_bits: int = 8_388_608
     # Bucket count for the partitioned bloom; None → seen_partitions.
     # (The cogroup probe shuffles by pmod bucket id — a distinct
-    # partitioning from the anti-join's xxhash64 repartition; matching
-    # the counts keeps parallelism aligned, not exchanges shared.)
+    # partitioning from the anti-join's url repartition, so the two
+    # exchanges are never shared.)
     bloom_buckets: Optional[int] = None
     # Below this seen-set size the bloom pre-filter costs more (full
     # seen scan + driver collect per round) than the shuffle it saves.
@@ -839,6 +847,35 @@ def _bucket_probe_anti_join(
     )
 
 
+# -- exact membership via shuffle anti-join ---------------------------------
+
+def _membership_width(spark: SparkSession, cfg: CrawlConfig) -> int:
+    """Partition count of the membership exchange: ``seen_partitions``
+    capped at the task-slot count. A task beyond the slots only queues
+    behind the others and adds its fixed cost (scheduling, one more
+    output file per checkpoint table), so on a small cluster the cap
+    keeps each round at one wave. ``seen_partitions`` stays the bloom,
+    cuckoo and bucket-layout geometry source; this width is not stamped
+    anywhere, so it may change between resumes."""
+    return min(cfg.seen_partitions, spark.sparkContext.defaultParallelism)
+
+
+def _by_url(df: DataFrame, n: int) -> DataFrame:
+    """Hash-partition on the join key column itself. ``repartition(n,
+    xxhash64(url))`` would partition on an EXPRESSION, which does not
+    satisfy the anti-join's clustering on ``url`` — the planner then
+    adds a second exchange on both sides."""
+    return df.repartition(n, "url")
+
+
+def _shuffle_anti_join(cand: DataFrame, seen: DataFrame, n: int) -> DataFrame:
+    """``cand`` minus the seen set. With ``cand`` already ``_by_url(.., n)``
+    (the round caches it that way), the only exchange is the seen side's
+    one shuffle; the join output keeps the url partitioning, so the
+    round's new entries land in ``n`` partitions."""
+    return cand.join(_by_url(seen.select("url"), n), "url", "left_anti")
+
+
 def sweep_revisit(
     spark: SparkSession,
     catalog: Catalog,
@@ -973,16 +1010,23 @@ def run_crawl(
             "expected 'bloom' or 'cuckoo'"
         )
     state = CrawlState()
+    member_parts = _membership_width(spark, cfg)
 
     start_round = catalog.committed_round()
     if start_round is None:
         # Round -1: seed the frontier. Normalization is the same kernel
         # function the simulator uses (byte-identical url identity).
+        # Both frames are local checkpoints: the url UDF runs once for
+        # the quarantine append and the frontier, and the dedup, traps
+        # and policy joins run once for the frontier write and the seen
+        # append — unmaterialized, each of the three writes re-ran the
+        # whole pipeline. (cache() is slower here: its AQE cache stages
+        # cost more jobs than the re-runs they save.)
         normed = seeds.select(
             F.col("url").alias("raw_url"),
             normalize_url_udf(F.col("url")).alias("url"),
             F.col("depth"),
-        )
+        ).localCheckpoint(eager=True)
         # invalid seeds → quarantine table, not an exception (SURVEY
         # §2.2: a poison row must never kill the run)
         catalog.append(
@@ -1000,7 +1044,9 @@ def run_crawl(
         )
         if traps is not None:
             seeded = trap_filter(seeded, traps)
-        frontier0 = _with_policy_columns(seeded, robots, host_rank)
+        frontier0 = _with_policy_columns(seeded, robots, host_rank).localCheckpoint(
+            eager=True
+        )
         catalog.write("frontier", frontier0, 0)
         # seen is a *delta* table: round k's delta holds only the urls
         # first enqueued entering round k. Rewriting the full seen-set
@@ -1084,7 +1130,7 @@ def run_crawl(
                 )
                 phases["extract"] = round(time.time() - tp, 3)
 
-            # --- seen membership: explicit url-hash repartition + bloom ----
+            # --- seen membership: explicit url repartition + bloom ---------
             seen = catalog.read_appended("seen", round_no)
             # Cached: consumed by both bloom branches — without the cache
             # the link-extraction UDF would re-run once per consumer.
@@ -1097,9 +1143,7 @@ def run_crawl(
                 # re-discovery next round re-screens it (cheap — the
                 # traps side is a broadcast of distinct templates).
                 links = trap_filter(links, traps)
-            cached_cand = links.repartition(
-                cfg.seen_partitions, F.xxhash64("url")
-            ).cache()
+            cached_cand = _by_url(links, member_parts).cache()
             # Materialize the harvest under its OWN timer: the link-
             # extraction UDF + url-hash repartition are lazy, and
             # without this their cost lands in whichever membership
@@ -1127,17 +1171,11 @@ def run_crawl(
 
             else:
                 # Shuffle anti-join — the whole seen set repartitions by
-                # url-hash each round. Measured CHEAPER below
+                # url once each round. Measured CHEAPER below
                 # probe_min_seen (file-open overhead beats a tiny
                 # shuffle); reads the bucketed layout transparently.
                 def _exact_new(c):
-                    return c.join(
-                        seen.repartition(
-                            cfg.seen_partitions, F.xxhash64("url")
-                        ),
-                        "url",
-                        "left_anti",
-                    )
+                    return _shuffle_anti_join(c, seen, member_parts)
 
             # Below ``bloom_min_seen`` urls the exact anti-join alone is
             # cheaper than maintaining/probing the bloom (the bloom's job is
@@ -1210,32 +1248,18 @@ def run_crawl(
                 "membership_partitions": {
                     int(r["pid"]): int(r["count"]) for r in part_counts
                 },
-                "wall_sec": round(time.time() - t0, 3),
             }
-            state.metrics.append(round_metrics)
-            metrics_df = spark.createDataFrame(
-                [
-                    (
-                        round_no,
-                        n_admitted,
-                        n_new,
-                        [(int(r["pid"]), int(r["count"])) for r in part_counts],
-                        round_metrics["wall_sec"],
-                    )
-                ],
-                "round int, admitted long, new_urls long, "
-                "partition_rows array<struct<pid:int,rows:long>>, wall_sec double",
-            )
             sched_df = admitted.select(
                 F.lit(round_no).alias("round"), F.col("seq"), F.col("url")
             )
-            # The four (five with bloom) checkpoint writes are independent
-            # table snapshots whose inputs are all cached — submitting them
-            # CONCURRENTLY overlaps their driver round-trips and output I/O
-            # (a serial sequence paid ~4-5 job latencies of pure driver
-            # wait per round). The round marker still commits strictly
-            # AFTER every write lands, so torn-round semantics are
-            # unchanged: a crash mid-flight leaves the previous round live.
+            # The three (four with a prefilter) checkpoint writes are
+            # independent table snapshots whose inputs are all cached —
+            # submitting them CONCURRENTLY overlaps their driver
+            # round-trips and output I/O (a serial sequence paid ~4-5 job
+            # latencies of pure driver wait per round). The round marker
+            # still commits strictly AFTER every write lands, so torn-round
+            # semantics are unchanged: a crash mid-flight leaves the
+            # previous round live.
             # keep=4 on the frontier: per-round snapshots would otherwise
             # grow the catalog by a full copy per round; resume needs only
             # the committed round and its successor.
@@ -1262,9 +1286,6 @@ def run_crawl(
                 ),
                 _timed(
                     "schedule", lambda: catalog.append("schedule", sched_df, round_no)
-                ),
-                _timed(
-                    "metrics", lambda: catalog.append("metrics", metrics_df, round_no)
                 ),
             ]
             if bloom_df is not None:
@@ -1298,6 +1319,27 @@ def run_crawl(
                 for fut in [pool.submit(w) for w in writes]:
                     fut.result()  # re-raise any write failure before commit
             phases["writes_barrier"] = round(time.time() - tp, 3)
+            # The metrics row goes last, once the checkpoint writes have
+            # landed, so its wall_sec spans them; it still lands before
+            # the commit, like every other table of the round.
+            round_metrics["wall_sec"] = round(time.time() - t0, 3)
+            metrics_df = spark.createDataFrame(
+                [
+                    (
+                        round_no,
+                        n_admitted,
+                        n_new,
+                        [(int(r["pid"]), int(r["count"])) for r in part_counts],
+                        round_metrics["wall_sec"],
+                    )
+                ],
+                "round int, admitted long, new_urls long, "
+                "partition_rows array<struct<pid:int,rows:long>>, wall_sec double",
+            )
+            _timed(
+                "metrics", lambda: catalog.append("metrics", metrics_df, round_no)
+            )()
+            state.metrics.append(round_metrics)
             catalog.commit_round(round_no + 1)
             if cfg.compact_every and (round_no + 1) % cfg.compact_every == 0:
                 tp = time.time()

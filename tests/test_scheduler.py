@@ -3,6 +3,8 @@ must reproduce the sequential reference-faithful simulator exactly —
 same admitted (round, seq, url) schedule, same final seen-set — and
 resume identically from a mid-crawl checkpoint."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -140,6 +142,89 @@ def test_metrics_lineage_recorded(spark, crawl):
         for r in rows.values()
     )
     assert any(len(r["partition_rows"]) >= 1 for r in rows.values())
+
+
+def test_round_wall_spans_checkpoint_writes(spark, crawl):
+    """A round's wall_sec is taken after its checkpoint writes land, so
+    it covers them; the metrics table and CrawlState carry one figure."""
+    state, catalog = crawl
+    table = {r["round"]: r["wall_sec"] for r in catalog.read_appended("metrics").collect()}
+    assert len(state.metrics) == state.rounds_run
+    for m in state.metrics:
+        assert m["wall_sec"] >= m["phases"]["writes_barrier"], m
+        assert table[m["round"]] == m["wall_sec"]
+
+
+def _plan_nodes(plan):
+    """Physical plan nodes, through AQE wrappers, query stages and reused
+    exchanges, but not into cached relations (an InMemoryTableScan is a
+    leaf here, so a cached side's own exchange is not counted)."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(plan.executedPlan())
+        return
+    yield plan
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(plan.plan())
+    elif name == "ReusedExchangeExec":
+        yield from _plan_nodes(plan.child())
+    else:
+        children = plan.children()
+        for i in range(children.size()):
+            yield from _plan_nodes(children.apply(i))
+
+
+def test_membership_join_shuffles_only_the_seen_side(spark, tmp_path):
+    """The round's exact membership check with broadcasts off: the
+    cached candidates are already hash-partitioned on url at slot
+    width, so the anti-join plans one exchange — the seen side's — and
+    no ENSURE_REQUIREMENTS re-shuffle of either side."""
+    from langscrape_spark.scheduler.frontier import (
+        _by_url, _membership_width, _shuffle_anti_join,
+    )
+
+    cfg = CrawlConfig(seen_partitions=32)
+    n = _membership_width(spark, cfg)
+    assert n == min(32, spark.sparkContext.defaultParallelism)
+    catalog = Catalog(spark, str(tmp_path / "cat"))
+    seen_urls = [f"https://h{i % 7}.example/p{i}" for i in range(300)]
+    catalog.append("seen", spark.createDataFrame([(u,) for u in seen_urls], "url string"), 0)
+    cand_urls = [f"https://h{i % 7}.example/p{i}" for i in range(250, 400)]
+    cand = _by_url(
+        spark.createDataFrame([(u, 1) for u in cand_urls], "url string, depth int"), n
+    ).cache()
+    cand.count()  # the round materializes its candidates before the join
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        new = _shuffle_anti_join(cand, catalog.read_appended("seen", 0), n)
+        got = {r["url"] for r in new.collect()}
+        nodes = list(_plan_nodes(new._jdf.queryExecution().executedPlan()))
+        n_out = new.rdd.getNumPartitions()
+    finally:
+        spark.conf.set(key, prev)
+        cand.unpersist()
+    assert got == set(cand_urls) - set(seen_urls)
+    plan = "\n".join(p.toString() for p in nodes)
+    exchanges = [p for p in nodes if p.getClass().getSimpleName() == "ShuffleExchangeExec"]
+    assert not any(str(e.shuffleOrigin()) == "ENSURE_REQUIREMENTS" for e in exchanges), plan
+    assert len(exchanges) == 1, plan
+    below = [p.getClass().getSimpleName() for p in _plan_nodes(exchanges[0])]
+    assert "FileSourceScanExec" in below, plan  # the exchange is the seen side's
+    assert n_out == n
+
+
+def test_seen_deltas_written_at_slot_width(spark, crawl):
+    """Each crawl round's seen delta holds at most one parquet file per
+    membership partition: min(seen_partitions, defaultParallelism)."""
+    state, catalog = crawl
+    n = min(8, spark.sparkContext.defaultParallelism)
+    deltas = [d for d in catalog.appended_dirs("seen") if not d.endswith("r000000")]
+    assert len(deltas) == state.rounds_run
+    for d in deltas:
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) <= n, (d, files)
 
 
 def test_parse_robots_txt_edges(spark):
