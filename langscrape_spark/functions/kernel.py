@@ -13,7 +13,7 @@ moral equivalent of a broadcast for kilobyte-sized plans.
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -26,15 +26,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..html.clean import clean_html_for_extraction
-from ..html.extract import extract_by_xpath_map
-from ..html.links import extract_links, normalize_url, url_host
+from ..html.clean import clean_for_extraction, clean_html_for_extraction
+from ..html.dom import parse
+from ..html.extract import SENTINEL_NO_STORED, extract_by_xpath_map
+from ..html.links import extract_links, links_of, normalize_url, url_host
 from ..html.textify import html_to_text, pdf_text_normalizer
 
 __all__ = [
     "clean_html_udf",
     "extract_links_udf",
+    "fetch_page",
     "html_to_text_udf",
+    "make_fetch_kernel_udf",
     "make_extract_fields_udf",
     "pdf_text_udf",
     "normalize_url_udf",
@@ -124,6 +127,22 @@ def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
     )
 
 
+def _pdf_text(v: Any) -> str:
+    """One pdf row's text: the body of ``pdf_text_udf``."""
+    if v is None:
+        return ""
+    raw = bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode()
+    try:  # pragma: no cover - exercised only where pymupdf exists
+        import pymupdf  # type: ignore
+
+        doc = pymupdf.open(stream=raw, filetype="pdf")
+        text = " ".join(page.get_text() for page in doc)
+    except Exception:
+        text = raw.decode("latin-1", errors="replace")
+        text = "".join(c for c in text if c.isprintable() or c.isspace())
+    return pdf_text_normalizer(text)
+
+
 @pandas_udf(StringType())
 def pdf_text_udf(body: pd.Series) -> pd.Series:
     """PDF → text route (reference langscrape/pdf/pdf_utils.py:22-34).
@@ -132,23 +151,75 @@ def pdf_text_udf(body: pd.Series) -> pd.Series:
     (binary column in → normalized text out, ``when(endswith(url,
     '.pdf'))`` routing) is real, the decode step is a deterministic
     fallback: latin-1-decode printable bytes then apply the reference's
-    ``text_normalizer``. Swap ``_decode`` for pymupdf in production."""
+    ``text_normalizer``. Swap ``_pdf_text``'s decode for pymupdf in
+    production."""
+    return body.map(_pdf_text)
 
-    def _decode(v: Any) -> str:
-        if v is None:
-            return ""
-        raw = bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode()
-        try:  # pragma: no cover - exercised only where pymupdf exists
-            import pymupdf  # type: ignore
 
-            doc = pymupdf.open(stream=raw, filetype="pdf")
-            text = " ".join(page.get_text() for page in doc)
-        except Exception:
-            text = raw.decode("latin-1", errors="replace")
-            text = "".join(c for c in text if c.isprintable() or c.isspace())
-        return pdf_text_normalizer(text)
+def fetch_page(
+    html: Any, base_url: Any, is_pdf: bool, field_map: Dict[str, Dict[str, Any]]
+) -> Tuple[List[str], str, Dict[str, List[str]]]:
+    """One fetched page → ``(links, cleaned, extracted)``, the row of the
+    crawl's fused fetch kernel.
 
-    return body.map(_decode)
+    An html page is parsed ONCE: its out-links are harvested from the
+    tree first (``links_of`` only reads it), then the same tree is
+    cleaned in place and serialized (``clean_for_extraction``), so the
+    three values equal ``extract_links(html, url)``,
+    ``clean_html_for_extraction(html)`` and
+    ``extract_by_xpath_map(cleaned, field_map)`` by construction. A pdf
+    page takes the pdf route of ``extract_pages`` (``pdf_text_udf``'s
+    text, the no-stored-value sentinel in every field) and its links
+    are harvested from its bytes, as the link-only harvest does."""
+    url = base_url if isinstance(base_url, str) else ""
+    if is_pdf:
+        return (
+            extract_links(_to_str(html), url),
+            _pdf_text(html),
+            {k: [SENTINEL_NO_STORED] for k in field_map},
+        )
+    doc = parse(_to_str(html))
+    links = links_of(doc, url)
+    cleaned = clean_for_extraction(doc)
+    return links, cleaned, extract_by_xpath_map(cleaned, field_map)
+
+
+def make_fetch_kernel_udf(field_map: Dict[str, Dict[str, Any]]):
+    """The crawl round's fused fetch kernel: ``(html:binary, url:string,
+    is_pdf:boolean) -> struct<links:array<string>, cleaned:string,
+    extracted:map<string,array<string>>>``, one ``fetch_page`` per row.
+
+    The link harvest and clean+extract share one crossing and one parse
+    per page. Pdf rows ride the same pass: a filter-split would scan the
+    pages table once per route and run twice the Python tasks."""
+    frozen = {k: dict(v) for k, v in field_map.items()}
+    out_type = StructType(
+        [
+            StructField("links", ArrayType(StringType())),
+            StructField("cleaned", StringType()),
+            StructField(
+                "extracted", MapType(StringType(), ArrayType(StringType()))
+            ),
+        ]
+    )
+
+    @pandas_udf(out_type)
+    def fetch_kernel_udf(
+        html: pd.Series, url: pd.Series, is_pdf: pd.Series
+    ) -> pd.DataFrame:
+        rows = [
+            fetch_page(h, u, bool(p), frozen)
+            for h, u, p in zip(html, url, is_pdf)
+        ]
+        return pd.DataFrame(
+            {
+                "links": [r[0] for r in rows],
+                "cleaned": [r[1] for r in rows],
+                "extracted": [r[2] for r in rows],
+            }
+        )
+
+    return fetch_kernel_udf
 
 
 @pandas_udf(StringType())

@@ -140,12 +140,20 @@ def clean_tree(doc: Document) -> Document:
     return doc
 
 
+def clean_for_extraction(doc: Document) -> str:
+    """Everything of ``clean_html_for_extraction`` after the parse:
+    clean (in place) → serialize → whitespace collapse → strip. A caller
+    that already holds the parsed page (the crawl's fused fetch kernel,
+    which harvests links from the tree first) gets the identical string
+    without parsing twice."""
+    clean_tree(doc)
+    return collapse_whitespace(doc.serialize())
+
+
 def clean_html_for_extraction(html_content: str) -> str:
     """The live ``clean_html_for_extraction3`` pipeline: parse → clean
     → serialize → whitespace collapse → strip."""
-    doc = parse(html_content)
-    clean_tree(doc)
-    return collapse_whitespace(doc.serialize())
+    return clean_for_extraction(parse(html_content))
 
 
 def _display_none(el: Element) -> bool:

@@ -10,10 +10,10 @@ the scheduler's candidate generation (SURVEY.md §2.12
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import Iterator, List, Optional, Tuple
 from urllib.parse import unquote, urljoin, urlparse
 
-from .dom import Document, Element, parse
+from .dom import Document, Element, collapse_whitespace, parse
 
 _SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "#")
 
@@ -45,13 +45,11 @@ def url_host(url: str) -> Optional[str]:
     return netloc or None
 
 
-def extract_links(html_str: str, base_url: str) -> List[str]:
-    """All out-links: <a href>, resolved against ``base_url``,
-    percent-decoded (reference ``decode_url``), normalized, deduped in
-    document order."""
-    doc = parse(html_str)
-    seen = set()
-    out: List[str] = []
+def _out_links(doc: Document, base_url: str) -> Iterator[Tuple[Element, str]]:
+    """``(<a> element, normalized target)`` for every harvestable href in
+    document order: resolved against ``base_url``, percent-decoded
+    (reference ``decode_url``), non-web schemes and bare fragments
+    skipped."""
     for el in doc.iter_elements():
         if el.tag != "a":
             continue
@@ -61,12 +59,29 @@ def extract_links(html_str: str, base_url: str) -> List[str]:
         href = unquote(href).strip()
         if not href or any(href.lower().startswith(s) for s in _SKIP_SCHEMES):
             continue
-        absolute = urljoin(base_url, href)
-        norm = normalize_url(absolute)
-        if norm and norm not in seen:
+        norm = normalize_url(urljoin(base_url, href))
+        if norm:
+            yield el, norm
+
+
+def links_of(doc: Document, base_url: str) -> List[str]:
+    """All out-links of an already-parsed page, deduped in document
+    order. Reads the tree without changing it, so a caller can harvest
+    links and then clean the same tree (one parse per page)."""
+    seen = set()
+    out: List[str] = []
+    for _el, norm in _out_links(doc, base_url):
+        if norm not in seen:
             seen.add(norm)
             out.append(norm)
     return out
+
+
+def extract_links(html_str: str, base_url: str) -> List[str]:
+    """All out-links: <a href>, resolved against ``base_url``,
+    percent-decoded (reference ``decode_url``), normalized, deduped in
+    document order."""
+    return links_of(parse(html_str), base_url)
 
 
 def extract_links_with_anchors(
@@ -83,21 +98,7 @@ def extract_links_with_anchors(
     signal the anchor rollup aggregates (anchor term frequency per
     target). Feeds ``operators/linkgraph.py::link_edges``.
     """
-    from .dom import collapse_whitespace
-
-    doc = parse(html_str)
-    out: List[Tuple[str, str]] = []
-    for el in doc.iter_elements():
-        if el.tag != "a":
-            continue
-        href = el.attrs.get("href")
-        if not href:
-            continue
-        href = unquote(href).strip()
-        if not href or any(href.lower().startswith(s) for s in _SKIP_SCHEMES):
-            continue
-        absolute = urljoin(base_url, href)
-        norm = normalize_url(absolute)
-        if norm:
-            out.append((norm, collapse_whitespace(el.get_text())))
-    return out
+    return [
+        (norm, collapse_whitespace(el.get_text()))
+        for el, norm in _out_links(parse(html_str), base_url)
+    ]

@@ -38,8 +38,10 @@ Scale design (the parts that must survive 1000 executors / 10^10 urls):
 - **Per-round lineage**: each round appends per-partition row counts
   for the membership stage plus round totals to a metrics table.
 
-Everything per-row-Python lives in the two kernel UDFs
-(link extraction, url normalization); all shuffles are JVM-side.
+Everything per-row-Python lives in the kernel UDFs: url normalization,
+and one pass per round over the fetched pages — the link harvest, or,
+with ``extract_field_map`` set, the fused fetch kernel that parses each
+page once for its out-links and its fields. All shuffles are JVM-side.
 """
 
 from __future__ import annotations
@@ -60,6 +62,10 @@ from .policy import BASE_BUDGET, DEFAULT_BATCH, DEFAULT_MAX_DEPTH, DEPTH_PENALTY
 
 SALT_BUCKETS = 8
 FRONTIER_DDL = "url string, host string, depth int, priority double"
+METRICS_DDL = (
+    "round int, admitted long, new_urls long, "
+    "partition_rows array<struct<pid:int,rows:long>>, wall_sec double"
+)
 
 
 @dataclass
@@ -876,6 +882,34 @@ def _shuffle_anti_join(cand: DataFrame, seen: DataFrame, n: int) -> DataFrame:
     return cand.join(_by_url(seen.select("url"), n), "url", "left_anti")
 
 
+def _metrics_row(
+    spark: SparkSession,
+    round_no: int,
+    n_admitted: int,
+    n_new: int,
+    part_counts: list,
+    wall_sec: float,
+) -> DataFrame:
+    """A round's metrics row (``METRICS_DDL``) as a one-partition
+    JVM-side relation of literals: no Python task, one output file.
+    ``createDataFrame`` over a Python list pickles the row through
+    ``parallelize`` + ``map``: Python tasks, each paying a worker's
+    fixed per-task cost, and two files for one row."""
+    partition_rows = F.array(
+        *[
+            F.struct(F.lit(int(r["pid"])).alias("pid"), F.lit(int(r["count"])).alias("rows"))
+            for r in part_counts
+        ]
+    )
+    return spark.range(0, 1, 1, 1).select(
+        F.lit(round_no).cast("int").alias("round"),
+        F.lit(n_admitted).cast("long").alias("admitted"),
+        F.lit(n_new).cast("long").alias("new_urls"),
+        partition_rows.cast("array<struct<pid:int,rows:long>>").alias("partition_rows"),
+        F.lit(wall_sec).cast("double").alias("wall_sec"),
+    )
+
+
 def sweep_revisit(
     spark: SparkSession,
     catalog: Catalog,
@@ -1095,40 +1129,48 @@ def run_crawl(
             # misses contribute no links, and Spark can build the hash side
             # from the broadcast batch (a left-outer here would forbid
             # broadcasting the admitted side and force a full shuffle).
-            # NOTE (measured, do not "fix"): links and the optional
-            # extraction below deliberately run SEPARATE broadcast-join
-            # scans of the pages table. Fusing them through one cached
-            # full-column batch was A/B-measured 2.5x SLOWER end-to-end —
-            # serializing html-heavy rows into executor storage costs more
-            # than the second pruned parquet scan it saves.
-            fetched = pages.select("url", "html").join(F.broadcast(admitted), "url", "inner")
-            links = (
-                fetched
-                .select(
+            results = None
+            if cfg.extract_field_map is None:
+                fetched = pages.select("url", "html").join(
+                    F.broadcast(admitted), "url", "inner"
+                )
+                harvested = fetched.select(
                     F.explode(extract_links_udf(F.col("html"), F.col("url"))).alias("url"),
                     (F.col("depth") + 1).alias("depth"),
                 )
-                .where(F.col("depth") <= cfg.max_depth)
+            else:
+                # With extraction on, the fetch is ONE Python pass over
+                # the fetched pages (``extract_and_harvest``): each page
+                # is parsed once for its out-links and its fields. Its
+                # output holds no html; it is materialized once, and the
+                # results append and the link harvest both read it. A
+                # local checkpoint, not cache(): under AQE a cache of an
+                # unmaterialized plan adds cache stages (measured slower
+                # on seeding). Caching the html-heavy fetched rows
+                # instead was measured 2.5x slower end-to-end.
+                from ..plans.extract import extract_and_harvest
+
+                tp = time.time()
+                fetched = extract_and_harvest(
+                    pages.join(
+                        F.broadcast(admitted.select("url", "depth")), "url", "inner"
+                    ),
+                    cfg.extract_field_map,
+                    carry=["depth"],
+                ).localCheckpoint(eager=True)
+                phases["extract"] = round(time.time() - tp, 3)
+                results = fetched.drop("links", "depth").withColumn(
+                    "round", F.lit(round_no)
+                )
+                harvested = fetched.select(
+                    F.explode("links").alias("url"),
+                    (F.col("depth") + 1).alias("depth"),
+                )
+            links = (
+                harvested.where(F.col("depth") <= cfg.max_depth)
                 .groupBy("url")
                 .agg(F.min("depth").alias("depth"))
             )
-
-            # --- per-round extraction (optional) ---------------------------
-            if cfg.extract_field_map is not None:
-                from ..plans.extract import extract_pages
-
-                tp = time.time()
-                batch_pages = pages.join(
-                    F.broadcast(admitted.select("url")), "url", "inner"
-                )
-                catalog.append(
-                    "results",
-                    extract_pages(batch_pages, cfg.extract_field_map).withColumn(
-                        "round", F.lit(round_no)
-                    ),
-                    round_no,
-                )
-                phases["extract"] = round(time.time() - tp, 3)
 
             # --- seen membership: explicit url repartition + bloom ---------
             seen = catalog.read_appended("seen", round_no)
@@ -1252,8 +1294,10 @@ def run_crawl(
             sched_df = admitted.select(
                 F.lit(round_no).alias("round"), F.col("seq"), F.col("url")
             )
-            # The three (four with a prefilter) checkpoint writes are
-            # independent table snapshots whose inputs are all cached —
+            # The checkpoint writes (frontier, seen, schedule, plus results
+            # with extraction on and the prefilter state when one is
+            # active) are independent table snapshots whose inputs are
+            # all cached or checkpointed —
             # submitting them CONCURRENTLY overlaps their driver
             # round-trips and output I/O (a serial sequence paid ~4-5 job
             # latencies of pure driver wait per round). The round marker
@@ -1288,6 +1332,13 @@ def run_crawl(
                     "schedule", lambda: catalog.append("schedule", sched_df, round_no)
                 ),
             ]
+            if results is not None:
+                writes.append(
+                    _timed(
+                        "results",
+                        lambda: catalog.append("results", results, round_no),
+                    )
+                )
             if bloom_df is not None:
                 # Incremental bloom maintenance: only the buckets touched
                 # by this round's new urls are rewritten (dynamic partition
@@ -1323,18 +1374,9 @@ def run_crawl(
             # landed, so its wall_sec spans them; it still lands before
             # the commit, like every other table of the round.
             round_metrics["wall_sec"] = round(time.time() - t0, 3)
-            metrics_df = spark.createDataFrame(
-                [
-                    (
-                        round_no,
-                        n_admitted,
-                        n_new,
-                        [(int(r["pid"]), int(r["count"])) for r in part_counts],
-                        round_metrics["wall_sec"],
-                    )
-                ],
-                "round int, admitted long, new_urls long, "
-                "partition_rows array<struct<pid:int,rows:long>>, wall_sec double",
+            metrics_df = _metrics_row(
+                spark, round_no, n_admitted, n_new, part_counts,
+                round_metrics["wall_sec"],
             )
             _timed(
                 "metrics", lambda: catalog.append("metrics", metrics_df, round_no)

@@ -110,7 +110,14 @@ class Catalog:
         old data is untouched (a stray ``__new`` is ignored/replaced);
         between the renames the target is missing but ``__new`` is
         complete — ``read`` heals by promoting it; after promotion the
-        leftover ``__old`` is swept on the next replace."""
+        leftover ``__old`` is swept on the next replace.
+
+        Single-driver only: one process may run ``write_replace`` or
+        ``read`` on a catalog at a time. The staging dirs carry no
+        owner, so a second driver's ``read`` of the same version would
+        take this call's in-flight ``__new`` for an abandoned one and
+        delete it mid-write (and a second ``write_replace`` would
+        remove it up front)."""
         path = self._data_dir(name, version)
         if not os.path.isdir(path):
             self._heal_replace(name, version)
@@ -181,7 +188,13 @@ class Catalog:
         """Read snapshot ``version`` (default: the table's own latest
         pointer). Passing an explicit version pins a re-executed round
         to its committed inputs even if a crashed later attempt left a
-        newer pointer behind."""
+        newer pointer behind.
+
+        Assumes a single driver per catalog: it deletes any
+        ``__new``/``__old`` sibling of the version as garbage from an
+        abandoned ``write_replace``, which is only safe when no other
+        process can be in the middle of one (a concurrent reader would
+        delete the live staging dir)."""
         if version is None:
             version = self.latest_version(name)
         if version is None:

@@ -15,6 +15,7 @@ unknown hosts default to allowed / rank 0 per policy.py.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 
@@ -88,7 +89,7 @@ def main() -> None:
             spark, catalog, spark.read.parquet(args.revisit),
             robots, host_rank, cycle_id=args.revisit_cycle_id,
         )
-        print({"revisit_injected": n})
+        print(json.dumps({"revisit_injected": n}))
 
     cfg = CrawlConfig(
         batch_size=args.batch_size,
@@ -98,7 +99,7 @@ def main() -> None:
     )
     state = run_crawl(spark, pages, seeds, robots, host_rank, catalog, cfg)
     for m in state.metrics:
-        print(m)
+        print(json.dumps(m))
     spark.stop()
 
 

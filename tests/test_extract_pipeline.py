@@ -84,3 +84,104 @@ def test_no_python_shuffle_in_plan(spark, pages):
     exchange below the Python stages (scan → project only)."""
     plan = extract_pages(pages, synth.FIELD_MAP)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+# -- the crawl's fused fetch kernel ------------------------------------------
+
+_DEEP = "<div>" * 200 + '<a href="/deep">deep link</a><p>deep body</p>' + "</div>" * 200
+_HREFS = (
+    '<html><head><title>t</title></head><body><h1>Edge hrefs</h1>'
+    '<a href="javascript:void(0)">js</a><a href=" JavaScript:alert(1)">js2</a>'
+    '<a href="mailto:a@b.example">mail</a><a href="tel:+100">tel</a>'
+    '<a href="#frag">frag</a><a href="">empty</a><a>none</a>'
+    '<a href="../up/x">up</a><a href="?q=1">query</a>'
+    '<a href="https://Other.Example/Path#sec">abs</a>'
+    '<a href="https://other.example/Path">dup</a>'
+    '<a href="/a%20b">pct</a><p>body text</p></body></html>'
+)
+KERNEL_CASES = [
+    (synth.url_of(3), synth.page_record(3, N_PAGES)["html"]),
+    (synth.url_of(17), synth.page_record(17, N_PAGES)["html"]),
+    ("https://bad.example/utf8",
+     b'<html><body><a href="/x">\xff\xfe bad</a><p>text \xc3\x28 more</p></body></html>'),
+    ("https://null.example/", None),
+    ("https://empty.example/", b""),
+    ("https://deep.example/a/b", _DEEP.encode()),
+    ("https://edge.example/dir/page", _HREFS.encode()),
+]
+
+
+def test_fetch_page_matches_separate_kernels():
+    """Per page, the fused kernel's (links, cleaned, extracted) equal the
+    link harvest, the cleaner and the extractor run separately."""
+    from langscrape_spark.functions.kernel import fetch_page
+    from langscrape_spark.html.links import extract_links
+
+    for url, html in KERNEL_CASES:
+        text = html.decode("utf-8", errors="replace") if html is not None else ""
+        links, cleaned, extracted = fetch_page(html, url, False, synth.FIELD_MAP)
+        assert links == extract_links(text, url), url
+        assert cleaned == clean_html_for_extraction(text), url
+        assert extracted == extract_by_xpath_map(cleaned, synth.FIELD_MAP), url
+    fetch_page(None, None, False, synth.FIELD_MAP)  # NULL html and url: no raise
+    edge = fetch_page(_HREFS.encode(), "https://edge.example/dir/page", False, {})[0]
+    assert edge == [
+        "https://edge.example/up/x",
+        "https://edge.example/dir/page?q=1",
+        "https://other.example/Path",
+        "https://edge.example/a b",
+    ]
+    deep = fetch_page(_DEEP.encode(), "https://deep.example/a/b", False, {})[0]
+    assert deep == ["https://deep.example/deep"]
+
+
+def test_extract_and_harvest_matches_extract_pages(spark):
+    """Through Spark, over html, pdf and poison rows: every result column
+    equals extract_pages', and ``links`` equals the link-only harvest
+    (extract_links_udf), pdf bytes included."""
+    from langscrape_spark.functions.kernel import extract_links_udf
+    from langscrape_spark.plans.extract import RESULT_COLUMNS, extract_and_harvest
+
+    rows = [(u, None, h, "", "en") for u, h in KERNEL_CASES]
+    rows += [
+        ("https://www.site1.example/docs/r.pdf", None,
+         b'%PDF-1.4 Report body text. <a href="/from-pdf">x</a>', "", "en"),
+        ("https://www.site1.example/docs/EMPTY.PDF", None, None, "", "en"),
+        ("not a url", None, b"<p>poison</p>", "", "en"),
+        (None, None, b'<a href="https://x.example/">x</a>', "", "en"),
+    ]
+    pages = spark.createDataFrame(rows, synth.PAGES_DDL)
+    fused = {r["url"]: r for r in extract_and_harvest(pages, synth.FIELD_MAP).collect()}
+    want = {r["url"]: r for r in extract_pages(pages, synth.FIELD_MAP).collect()}
+    harvest = {
+        r["url"]: r["links"]
+        for r in pages.select(
+            "url", extract_links_udf(F.col("html"), F.col("url")).alias("links")
+        ).collect()
+    }
+    assert len(fused) == len(rows) == len(want)
+    for url, row in fused.items():
+        assert {c: row[c] for c in RESULT_COLUMNS} == want[url].asDict(), url
+        assert row["links"] == harvest[url], url
+    pdf = fused["https://www.site1.example/docs/r.pdf"]
+    assert pdf["is_pdf"] and pdf["links"] == ["https://www.site1.example/from-pdf"]
+    assert pdf["extracted"]["title"] == ["(No stored value)"]
+
+
+def test_extract_and_harvest_scans_pages_once(spark, tmp_path):
+    """One scan of the pages table and one Python stage, pdf route
+    included (extract_pages' filter-split scans once per route)."""
+    from langscrape_spark.plans.extract import extract_and_harvest
+
+    path = str(tmp_path / "pages")
+    synth.build_pages_df(spark, 8, partitions=2).write.parquet(path)
+    admitted = spark.createDataFrame(
+        [(synth.url_of(i), 1) for i in range(4)], "url string, depth int"
+    )
+    batch = spark.read.parquet(path).join(F.broadcast(admitted), "url", "inner")
+    plan = (
+        extract_and_harvest(batch, synth.FIELD_MAP, carry=["depth"])
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan

@@ -557,3 +557,43 @@ def test_bm25_plan_broadcasts_query_and_takes_ordered(spark):
     )
     assert "TakeOrderedAndProject" in plan, plan
     assert plan.count("BroadcastHashJoin") >= 2, plan
+
+
+def test_in_loop_extraction_with_pdf_row(spark, corpus, oracle, tmp_path):
+    """A fetched pdf that links nowhere: the fused fetch routes it to the
+    pdf path, harvests no links from it (the crawl still equals the
+    simulator, for which the pdf is a fetch miss), and every results
+    column equals extract_pages over the scheduled pages."""
+    from langscrape_spark.plans.extract import RESULT_COLUMNS, extract_pages
+
+    pages, seeds, robots, host_rank = corpus
+    pdf_url = f"https://{synth.host_of(0)}/docs/report.pdf"
+    pdf = spark.createDataFrame(
+        [(pdf_url, None, b"%PDF-1.4 Report body text. No links here.", "", "en")],
+        synth.PAGES_DDL,
+    )
+    with_pdf = pages.unionByName(pdf)
+    state, catalog = _run(
+        spark, (with_pdf, seeds, robots, host_rank), tmp_path / "pdfcrawl",
+        extract_field_map=synth.FIELD_MAP,
+    )
+    sim_schedule, sim_seen = oracle
+    assert [
+        (r["round"], r["seq"], r["url"])
+        for r in state.schedule.orderBy("round", "seq").collect()
+    ] == sim_schedule
+    assert {r["url"] for r in state.seen.collect()} == sim_seen
+
+    results = catalog.read_appended("results")
+    got = {r["url"]: r for r in results.collect()}
+    fetched = with_pdf.join(F.broadcast(state.schedule.select("url")), "url", "inner")
+    want = {r["url"]: r for r in extract_pages(fetched, synth.FIELD_MAP).collect()}
+    assert set(got) == set(want) and pdf_url in got
+    for url, row in got.items():
+        assert {c: row[c] for c in RESULT_COLUMNS} == want[url].asDict(), url
+    assert got[pdf_url]["is_pdf"]
+    assert got[pdf_url]["extracted"]["title"] == ["(No stored value)"]
+    # the table's schema, read back, is the one extract_pages' rows had
+    old = str(tmp_path / "old_results")
+    extract_pages(fetched, synth.FIELD_MAP).withColumn("round", F.lit(0)).write.parquet(old)
+    assert results.schema == spark.read.parquet(old).schema

@@ -155,6 +155,23 @@ def test_round_wall_spans_checkpoint_writes(spark, crawl):
         assert table[m["round"]] == m["wall_sec"]
 
 
+def test_metrics_delta_is_one_file_with_the_table_schema(spark, crawl, tmp_path):
+    """Each round's metrics row is written as exactly one parquet file,
+    and the table reads back with the schema a Python-list
+    createDataFrame of METRICS_DDL gives."""
+    from langscrape_spark.scheduler.frontier import METRICS_DDL
+
+    state, catalog = crawl
+    deltas = catalog.appended_dirs("metrics")
+    assert len(deltas) == state.rounds_run
+    for d in deltas:
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    ref = str(tmp_path / "ref_metrics")
+    spark.createDataFrame([(0, 1, 1, [(0, 1)], 0.5)], METRICS_DDL).write.parquet(ref)
+    assert catalog.read_appended("metrics").schema == spark.read.parquet(ref).schema
+
+
 def _plan_nodes(plan):
     """Physical plan nodes, through AQE wrappers, query stages and reused
     exchanges, but not into cached relations (an InMemoryTableScan is a
