@@ -19,7 +19,7 @@ Appends are plain dynamic-partition appends — a torn append leaves a
 SUPERSET of some round's rows, and the probe drops duplicate
 ``(bucket, id)`` rows per partition, so retries are safe (duplicates
 cost read volume, never wrong pair counts — the same
-superset-is-safe argument as the frontier's bloom deltas).
+superset-is-safe argument as the frontier's prefilter updates).
 
 Probe shape (the part that must stay flat per round): the NEW batch's
 assignments group by ``bpart`` (one shuffle of the SMALL side — the
@@ -116,7 +116,7 @@ def _check_geometry(
     bucket STRINGS that can never equal the stored ones — either way
     near-duplicates are silently MISSED with zero errors. The geometry
     marker (written before the first data append — same commit-order
-    argument as the frontier bloom's _STATE stamp: torn data after a
+    argument as the frontier prefilter's _STATE stamp: torn data after a
     committed marker is a safe superset) pins the whole dict and makes
     any mismatch loud instead."""
     import json

@@ -1,5 +1,6 @@
-"""Partitioned cuckoo filter — the deletion-capable half of the
-"bloom/cuckoo URL-seen set" contract (BASELINE.json north rule).
+"""Partitioned cuckoo filter — the URL-seen-set prefilter of the north
+rule's "bloom/cuckoo URL-seen set" contract (BASELINE.json), and the
+frontier's only one (``frontier.py::_ensure_cuckoo``).
 
 Reference behavior: the reference crawler keeps its "seen" state as
 driver-side per-url JSON bookkeeping — each processed url is written
@@ -10,23 +11,23 @@ run loop re-reads/re-writes that log per id
 — this is the from-scratch scale design. Fan/Andersen/Kaminsky/Mitzenmacher, "Cuckoo Filter:
 Practically Better Than Bloom" (CoNEXT 2014).
 
-Why a cuckoo filter next to the partitioned bloom
-(`frontier.py::_build_bloom_df`): the bloom answers "maybe seen /
-definitely new" but cannot UNLEARN a url — and a production crawler
-must re-admit pages due for revisit (`revisit_schedule`, q48).  With
-a bloom, revisit-due urls are forever "maybe seen" and every one of
-them pays the exact anti-join.  The cuckoo filter stores displaceable
-fingerprints, so a revisit sweep DELETES the due urls from the
-filter and they flow through the cheap "definitely new" path again —
-the screen stays aligned with the *effective* seen set (seen minus
-revoked) instead of the historical insert log.
+Why a cuckoo filter rather than a bloom filter: both answer "maybe
+seen / definitely new", but a bloom cannot UNLEARN a url — and a
+production crawler must re-admit pages due for revisit
+(`revisit_schedule`, q48).  With a bloom, revisit-due urls are
+forever "maybe seen" and every one of them pays the exact anti-join.
+The cuckoo filter stores displaceable fingerprints, so a revisit
+sweep can DELETE the due urls from the filter and they flow through
+the cheap "definitely new" path again — the screen stays aligned with
+the *effective* seen set (seen minus revoked) instead of the
+historical insert log (q187).
 
 Sharding mirrors the seen-set layout: urls bucket by
 ``pmod(xxhash64(url), n_buckets)`` (one independent filter table per
 bucket, a binary blob row), so build/insert/delete/probe all run as
 ONE cogrouped Arrow pass per bucket — the blobs never replicate per
 candidate row, hot hosts spread by url hash, and per-round I/O is
-O(touched buckets), the same properties the partitioned bloom ships.
+O(touched buckets).
 
 In-bucket mechanics (all integer, deterministic, order-canonicalized
 — a filter built from any partitioning/arrival order is byte-equal,
@@ -69,8 +70,8 @@ loud (saturated flag) instead of silent.  FPP ~= 2b/2^fbits
 
 At 10^10 urls: 16 bits x 4 slots x (10^10/0.84) ~ 11 GiB total,
 spread over n_buckets blobs (e.g. 4096 buckets -> ~3 MiB each), each
-bucket's blob living next to its seen-set bucket — same dynamic
-partition-overwrite merge unit as the bloom.
+bucket's blob living next to its seen-set bucket — the bucket is the
+dynamic-partition-overwrite merge unit.
 """
 
 from __future__ import annotations
@@ -263,8 +264,8 @@ def cuckoo_update(
     """Apply deletions then insertions to the stored blobs (deletions
     first so a url revoked and re-crawled in the same round ends up
     PRESENT).  ``changed_only=True`` emits only touched buckets — the
-    dynamic-partition-overwrite merge unit, exactly the bloom's
-    per-round I/O contract.
+    dynamic-partition-overwrite merge unit, so per-round I/O is
+    O(touched buckets).
 
     Caller contract: insert each url AT MOST ONCE across the state's
     lifetime (the frontier satisfies this — only urls that passed the
@@ -353,7 +354,7 @@ def cuckoo_probe(
     touched): a candidate whose bucket has no blob reads as
     definitely-new.  Probing a ``changed_only`` DELTA frame would
     silently answer False for untouched buckets — merge deltas into
-    the stored full state first (the bloom `_STATE` marker flow)."""
+    the stored full state first (the frontier's `_STATE` marker flow)."""
     import pandas as pd
 
     cand = candidates.withColumn("_bucket", _bucket_col(cfg)).withColumn(
@@ -397,7 +398,7 @@ def cuckoo_probe(
 def cuckoo_stats(state: DataFrame, cfg: CuckooConfig) -> DataFrame:
     """One row of filter health: items, load factor, saturated
     buckets, deletion misses — the per-round lineage row a production
-    crawl logs next to the bloom/seen metrics."""
+    crawl logs next to the seen-set metrics."""
     cap = cfg.m * cfg.b
     return state.agg(
         F.count(F.lit(1)).alias("n_blobs"),

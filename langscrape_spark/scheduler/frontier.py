@@ -18,10 +18,11 @@ Scale design (the parts that must survive 1000 executors / 10^10 urls):
   so the planner shuffled both sides a second time.) ``n`` is
   ``seen_partitions`` capped at the task-slot count, so a round is one
   wave of tasks and writes at most ``n`` files per seen delta.
-  A JVM-side bloom filter built from the seen table
-  (``bloom_filter_agg`` / ``might_contain``) pre-filters candidates so
-  the exact anti-join shuffles only probable-new urls; the bloom's
-  false positives are removed by the anti-join, so admission is exact.
+  Once the seen set reaches ``prefilter_min_seen`` urls, a partitioned
+  cuckoo filter over it (``scheduler/cuckoo.py``, stored beside the
+  seen checkpoint) screens candidates first, so the exact check sees
+  only the maybe-seen ones; its false positives are removed by that
+  check, so admission is exact.
 - **Politeness with skew**: the per-host top-k window is two-phase:
   first rank within ``(host, salt)`` where ``salt = pmod(xxhash64(url),
   SALT_BUCKETS)`` and keep k per salt bucket, then rank the ≤ salt·k
@@ -47,6 +48,7 @@ page once for its out-links and its fields. All shuffles are JVM-side.
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -58,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..functions.kernel import extract_links_udf, normalize_url_udf
 from ..sources.catalog import Catalog
+from .cuckoo import CuckooConfig, cuckoo_build, cuckoo_probe, cuckoo_update
 from .policy import BASE_BUDGET, DEFAULT_BATCH, DEFAULT_MAX_DEPTH, DEPTH_PENALTY
 
 SALT_BUCKETS = 8
@@ -74,27 +77,11 @@ class CrawlConfig:
     max_depth: int = DEFAULT_MAX_DEPTH
     max_rounds: int = 100
     seen_partitions: int = 32
-    use_bloom: bool = True
-    bloom_items: int = 1_000_000
-    # Per-BUCKET bitset size for the partitioned bloom (must be a
-    # multiple of 8; 2^23 bits = 1 MiB packed per bucket).
-    bloom_bits: int = 8_388_608
-    # Bucket count for the partitioned bloom; None → seen_partitions.
-    # (The cogroup probe shuffles by pmod bucket id — a distinct
-    # partitioning from the anti-join's url repartition, so the two
-    # exchanges are never shared.)
-    bloom_buckets: Optional[int] = None
-    # Below this seen-set size the bloom pre-filter costs more (full
-    # seen scan + driver collect per round) than the shuffle it saves.
-    bloom_min_seen: int = 2_000_000
-    # Approximate-membership prefilter implementation once active:
-    # "bloom" (default; SQL bloom or the partitioned bitset path) or
-    # "cuckoo" (scheduler/cuckoo.py — same maybe/definitely-new
-    # screen and admission exactness, but fingerprints are
-    # DELETABLE, so a revisit sweep can re-open urls without a full
-    # rebuild; geometry derives from bloom_items/bloom_buckets).
-    # Both paths are admission-identical (schedule-md5 parity test).
-    prefilter: str = "bloom"
+    # Seen-set size at which the cuckoo prefilter switches on (0 forces
+    # it on from round 0). Below it the exact check runs alone: on
+    # small seen sets the screen's build/probe/advance only adds round
+    # time (schedule-identical A/Bs, BASELINE.md).
+    prefilter_min_seen: int = 2_000_000
     # When set, each round runs the extraction kernel over its fetched
     # batch and appends to the catalog's "results" table — the full
     # "scheduled+extracted per round" production shape. None keeps the
@@ -233,390 +220,58 @@ def _politeness_admit(frontier: DataFrame, robots: DataFrame, batch_size: int) -
     return admitted.withColumn("seq", F.row_number().over(seq_w) - 1)
 
 
-_BLOOM_SQL_AVAILABLE: Optional[bool] = None
-
-
-def _bloom_sql_available(spark: SparkSession) -> bool:
-    """``bloom_filter_agg``/``might_contain`` are internal expressions;
-    registration varies by build. Detect once per process. When absent,
-    the engine still gets bloom pre-filtering from Catalyst's runtime
-    bloom-filter injection (enabled in session.py), plus the exact
-    anti-join below."""
-    global _BLOOM_SQL_AVAILABLE
-    if _BLOOM_SQL_AVAILABLE is None:
-        try:
-            _BLOOM_SQL_AVAILABLE = spark.catalog.functionExists(
-                "might_contain"
-            ) and spark.catalog.functionExists("bloom_filter_agg")
-        except Exception:
-            _BLOOM_SQL_AVAILABLE = False
-    return _BLOOM_SQL_AVAILABLE
-
-
-def _bloom_prefilter(
-    spark: SparkSession, candidates: DataFrame, seen: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    """Explicit JVM bloom pre-filter (used when the SQL functions are
-    registered): candidates the bloom rules out skip the exact anti-join
-    entirely; false positives fall through to it, so admission stays
-    exact."""
-    # bloom_bits is PER-BUCKET for the partitioned path; the single
-    # global SQL bloom gets the equivalent total capacity (bits × nb),
-    # else the same config would build a ~nb× weaker filter here.
-    nb = cfg.bloom_buckets or cfg.seen_partitions
-    # bloom_filter_agg silently CLAMPS numBits to
-    # spark.sql.optimizer.runtime.bloomFilter.maxNumBits (default 2^26)
-    # — without raising it, a 2^28-bit request builds a ~4× weaker
-    # filter (admission stays exact via the anti-join, but more
-    # candidates fall through). Raise the conf to the request.
-    try:
-        cur = int(
-            spark.conf.get(
-                "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "67108864"
-            )
-        )
-        want = cfg.bloom_bits * nb
-        if want > cur:
-            spark.conf.set(
-                "spark.sql.optimizer.runtime.bloomFilter.maxNumBits", str(want)
-            )
-    except Exception:
-        pass  # conf locked down: the clamp only weakens, never breaks
-    bloom_row = seen.select(
-        F.expr(
-            f"bloom_filter_agg(xxhash64(url), "
-            f"cast({cfg.bloom_items} as bigint), "
-            f"cast({cfg.bloom_bits * nb} as bigint)) as bf"
-        )
-    ).collect()[0]
-    bf = bloom_row["bf"]
-    if bf is None:
-        return candidates.withColumn("maybe_seen", F.lit(False))
-    bf_df = spark.createDataFrame([(bytearray(bf),)], "bf binary")
-    return candidates.join(F.broadcast(bf_df)).withColumn(
-        "maybe_seen", F.expr("might_contain(bf, xxhash64(url))")
-    ).drop("bf")
-
-
-_BLOOM_K = 3  # hash functions per key
-
-
-def _bloom_positions(m_bits: int):
-    """k bit positions per url, computed JVM-side with ``xxhash64`` so
-    build and probe agree without a Python xxhash implementation."""
-    return F.array(
-        *[
-            F.pmod(F.xxhash64(F.col("url"), F.lit(i)), F.lit(m_bits))
-            for i in range(_BLOOM_K)
-        ]
-    )
-
-
 # ---------------------------------------------------------------------------
-# Partitioned bloom filter (the no-driver-collect scale path)
+# Seen-set prefilter: a partitioned cuckoo filter (scheduler/cuckoo.py)
 # ---------------------------------------------------------------------------
-# One bitset per url-hash bucket, stored as a bucket-PARTITIONED
-# parquet directory beside the seen checkpoint:
-# - BUILD (once, on activation or state mismatch): explode each seen
-#   url's k bit positions, distinct, pack per bucket with a grouped
-#   pandas apply — one equi-shuffle, nothing on the driver.
-# - MERGE (per round): only the buckets the round's new urls TOUCH are
-#   rewritten, via dynamic partition overwrite — per-round I/O is
-#   O(touched buckets), never O(total bloom) (a full versioned-snapshot
-#   rewrite per round would reintroduce the full-copy-per-round cost
-#   class the seen table's delta design exists to avoid).
-# - PROBE: candidates cogrouped with their bucket's bitset — the bits
-#   travel once per bucket, never once per candidate row (a plain join
-#   would replicate a MiB-scale bitset onto every row).
-# Crash-safety: the `_STATE` marker (round + GEOMETRY: bits/buckets/k)
-# is INVALIDATED before each merge write and re-stamped after it.
-# Required because dynamic partition overwrite deletes each matched
-# bucket dir before renaming staged files at job commit — a kill
-# inside that window leaves a bucket MISSING (false negatives, NOT a
-# superset), which a stale marker would wrongly validate. With the
-# invalidate-write-stamp order, every crash point resolves to either
-# the previous committed bloom or a full rebuild from the committed
-# seen set (`test_bloom_crash_inside_merge_overwrite_forces_rebuild`).
-# A geometry or round mismatch in `_STATE` likewise forces a rebuild
-# (probing with the wrong modulus would produce false NEGATIVES).
+# One fingerprint table per url-hash bucket, stored as a bucket-
+# PARTITIONED parquet directory beside the seen checkpoint:
+# - BUILD (on activation or state mismatch): ``cuckoo_build`` over the
+#   committed seen set — one equi-shuffle, nothing on the driver.
+# - ADVANCE (per round): only the buckets the round's new urls TOUCH
+#   are rewritten, via dynamic partition overwrite — per-round I/O is
+#   O(touched buckets), never O(total filter).
+# - PROBE: candidates cogrouped with their bucket's table — the table
+#   travels once per bucket, never once per candidate row.
+# Crash-safety: the `_STATE` marker (round + GEOMETRY) is INVALIDATED
+# before each advance write and re-stamped after it. Required because
+# dynamic partition overwrite deletes each matched bucket dir before
+# renaming staged files at job commit — a kill inside that window
+# leaves a bucket MISSING (false negatives, NOT a superset), which a
+# stale marker would wrongly validate. With the invalidate-write-stamp
+# order, every crash point resolves to either the previous committed
+# state or a full rebuild from the committed seen set (crash-tested in
+# tests/test_hardening.py). A geometry or round mismatch in `_STATE`
+# likewise forces a rebuild (probing with the wrong geometry would
+# produce false NEGATIVES).
 
 
-def _bloom_layout(cfg: CrawlConfig) -> tuple:
-    """(n_buckets, bits_per_bucket) — the single source of the bloom
-    geometry; build, merge and probe must all agree on it."""
-    return (cfg.bloom_buckets or cfg.seen_partitions, cfg.bloom_bits)
+def _cuckoo_cfg(cfg: CrawlConfig, n_seen: int = 0) -> CuckooConfig:
+    """CuckooConfig with one shard per ``seen_partitions``, sized for
+    ``max(prefilter_min_seen, n_seen)`` urls at <=0.84 load (b=4,
+    16-bit fingerprints — FPP ~1.2e-4; memory 2 bytes/slot).
 
-
-def _bloom_bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
-
-
-def _bucketed_positions(urls: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    nb, m = _bloom_layout(cfg)
-    return urls.select(
-        _bloom_bucket_col(nb).alias("bucket"),
-        F.explode(_bloom_positions(m)).alias("p"),
-    ).distinct()
-
-
-def _pack_bits(m_bits: int, positions, prev: bytes | None = None) -> bytes:
-    import numpy as np
-
-    bits = (
-        np.unpackbits(np.frombuffer(prev, dtype=np.uint8))
-        if prev is not None
-        else np.zeros(m_bits, dtype=np.uint8)
-    )
-    if len(positions):
-        bits[np.asarray(positions, dtype=np.int64)] = 1
-    return np.packbits(bits).tobytes()
-
-
-def _build_bloom_df(urls: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    import pandas as pd
-
-    _, m = _bloom_layout(cfg)
-
-    def pack(pdf):
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iloc[0])],
-                "bits": [_pack_bits(m, pdf["p"].to_numpy())],
-            }
-        )
-
-    return (
-        _bucketed_positions(urls, cfg)
-        .groupBy("bucket")
-        .applyInPandas(pack, "bucket int, bits binary")
-    )
-
-
-def _merge_bloom_df(
-    bloom: DataFrame,
-    new_urls: DataFrame,
-    cfg: CrawlConfig,
-    changed_only: bool = False,
-) -> DataFrame:
-    """OR the new urls' bit positions into the stored bitsets.
-    ``changed_only=True`` emits only buckets that received new
-    positions (the dynamic-partition-overwrite merge unit); the default
-    emits the full merged table (build ≡ merge-with-empty — pinned by
-    test_partitioned_bloom_merge_equals_rebuild)."""
-    import pandas as pd
-
-    _, m = _bloom_layout(cfg)
-    new_pos = _bucketed_positions(new_urls, cfg)
-
-    def merge(key, bloom_pdf, pos_pdf):
-        if changed_only and not len(pos_pdf):
-            return pd.DataFrame({"bucket": [], "bits": []}).astype(
-                {"bucket": "int32", "bits": "object"}
-            )
-        prev = bytes(bloom_pdf["bits"].iloc[0]) if len(bloom_pdf) else None
-        return pd.DataFrame(
-            {
-                "bucket": [int(key[0])],
-                "bits": [_pack_bits(m, pos_pdf["p"].to_numpy(), prev)],
-            }
-        )
-
-    return (
-        bloom.groupBy("bucket")
-        .cogroup(new_pos.groupBy("bucket"))
-        .applyInPandas(merge, "bucket int, bits binary")
-    )
-
-
-def _partitioned_bloom_probe(
-    candidates: DataFrame, bloom: DataFrame, cfg: CrawlConfig
-) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    nb, m = _bloom_layout(cfg)
-    cand = candidates.withColumn("_bucket", _bloom_bucket_col(nb)).withColumn(
-        "_pos", _bloom_positions(m)
-    )
-    out_cols = candidates.columns
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def probe(key, cand_pdf, bloom_pdf):
-        if not len(cand_pdf):
-            return pd.DataFrame(columns=out_cols + ["maybe_seen"])
-        out = cand_pdf[out_cols].copy()
-        if not len(bloom_pdf):
-            out["maybe_seen"] = False
-            return out
-        bits = np.unpackbits(
-            np.frombuffer(bytes(bloom_pdf["bits"].iloc[0]), dtype=np.uint8)
-        ).astype(bool)
-        # one vectorized gather for the whole group (k positions per
-        # url), not a per-row python loop — this IS the hot path
-        pos = np.vstack(cand_pdf["_pos"].to_numpy())
-        out["maybe_seen"] = bits[pos].all(axis=1)
-        return out
-
-    return (
-        cand.groupBy("_bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-    )
-
-
-# -- bloom storage (bucket-partitioned dir + atomic state marker) -----------
-
-def _bloom_dir(catalog: Catalog) -> str:
-    import os
-
-    return os.path.join(catalog.root, "bloom_parts")
-
-
-def _bloom_state(catalog: Catalog):
-    import json
-    import os
-
-    try:
-        with open(os.path.join(_bloom_dir(catalog), "_STATE")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def _write_bloom_state(catalog: Catalog, round_no: int, cfg: CrawlConfig) -> None:
-    import json
-    import os
-
-    nb, m = _bloom_layout(cfg)
-    os.makedirs(_bloom_dir(catalog), exist_ok=True)
-    path = os.path.join(_bloom_dir(catalog), "_STATE")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"round": round_no, "bits": m, "buckets": nb, "k": _BLOOM_K}, f)
-    os.replace(tmp, path)  # atomic; leading '_' keeps parquet readers away
-
-
-def _invalidate_bloom_state(catalog: Catalog) -> None:
-    """Remove the state marker so any crash before the next stamp
-    forces ``_ensure_bloom``'s full rebuild from the committed seen
-    set. Required around the merge write: dynamic partition overwrite
-    DELETES each matched bucket dir before renaming staged files at
-    job commit, so a kill inside that commit window can leave a bucket
-    MISSING (a false-NEGATIVE source, not a superset) while a stale
-    _STATE would still validate it."""
-    import os
-
-    try:
-        os.remove(os.path.join(_bloom_dir(catalog), "_STATE"))
-    except FileNotFoundError:
-        pass
-
-
-def _bloom_state_current(catalog: Catalog, cfg: CrawlConfig, round_no: int) -> bool:
-    nb, m = _bloom_layout(cfg)
-    return _bloom_state(catalog) == {
-        "round": round_no, "bits": m, "buckets": nb, "k": _BLOOM_K,
-    }
-
-
-def _ensure_bloom(
-    catalog: Catalog, seen: DataFrame, cfg: CrawlConfig, round_no: int
-) -> DataFrame:
-    """Return the bloom at ``round_no``, rebuilding from the full seen
-    set when the state marker is absent, for a different round (bloom
-    was inactive, or a torn attempt), or for a DIFFERENT GEOMETRY —
-    probing a bitset with the wrong modulus/bucket count would yield
-    false negatives, the one failure admission-exactness can't absorb."""
-    spark = seen.sparkSession
-    if not _bloom_state_current(catalog, cfg, round_no):
-        (
-            _build_bloom_df(seen.select("url"), cfg)
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(_bloom_dir(catalog))
-        )
-        _write_bloom_state(catalog, round_no, cfg)
-    return spark.read.parquet(_bloom_dir(catalog))
-
-
-def _advance_bloom(
-    catalog: Catalog,
-    bloom: DataFrame,
-    new_urls: DataFrame,
-    cfg: CrawlConfig,
-    next_round: int,
-) -> None:
-    """Fold the round's new urls in and commit the state marker.
-    Only touched buckets are rewritten (dynamic partition overwrite);
-    the changed set is localCheckpoint-ed first because Spark refuses
-    to overwrite a path that appears as a source in the write's own
-    plan (the merge reads the same directory)."""
-    changed = _merge_bloom_df(
-        bloom, new_urls, cfg, changed_only=True
-    ).localCheckpoint(eager=True)
-    # Invalidate-then-write-then-stamp: the overwrite's commit window
-    # (bucket dir deleted, staged file not yet renamed) is the one
-    # crash point where the stored bloom is NOT a superset of the
-    # committed seen set. With _STATE gone during the window, any
-    # crash inside it resolves to a full rebuild on resume instead of
-    # probing a bloom with a silently-missing bucket (false negatives
-    # ⇒ the exact anti-join is skipped ⇒ duplicate admissions).
-    _invalidate_bloom_state(catalog)
-    (
-        changed.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(_bloom_dir(catalog))
-    )
-    _write_bloom_state(catalog, next_round, cfg)
-
-
-# -- cuckoo prefilter storage (deletion-capable bloom alternative) ----------
-# Same bucket-partitioned dir + invalidate-write-stamp marker protocol
-# as the bloom (see the crash-safety discussion above _bloom_layout):
-# a geometry or round mismatch forces a rebuild from the committed
-# seen set, and any crash inside the dynamic-partition-overwrite
-# window resolves to that rebuild rather than probing a state with a
-# silently-missing bucket.
-
-
-def _cuckoo_cfg(cfg: CrawlConfig, n_seen: int = 0):
-    """CuckooConfig sized for ``max(bloom_items, bloom_min_seen,
-    n_seen)`` urls at <=0.84 load (b=4, 16-bit fingerprints — FPP
-    ~1.2e-4, far below the bloom's; memory 2 bytes/slot vs the
-    bitset's bloom_bits/8).
-
-    ``bloom_min_seen`` is in the max because the prefilter only
-    activates once the seen set reaches it — sizing from
-    ``bloom_items`` alone (the old behavior) would build the filter
-    at ~0.95+ nominal load on first activation and hard-saturate
-    every shard to all-maybe immediately.  ``n_seen`` (the live seen
-    count at build time) keeps it sized as the crawl grows: ``m`` is
-    rounded up to a power of two, so the derived geometry is stable
-    until the count crosses the next sizing boundary, at which point
-    the ``_STATE`` marker mismatch forces one rebuild with doubled
-    ``m`` — amortized-doubling growth, O(log) rebuilds over a crawl's
-    life, never silent saturation."""
-    import math
-
-    from .cuckoo import CuckooConfig
-
-    nb = cfg.bloom_buckets or cfg.seen_partitions
-    target = max(cfg.bloom_items, cfg.bloom_min_seen, int(n_seen))
+    ``prefilter_min_seen`` is in the max because the prefilter only
+    activates once the seen set reaches it — sizing for less would
+    build the filter at ~0.95+ nominal load on first activation and
+    hard-saturate every shard to all-maybe immediately.  ``n_seen``
+    (the live seen count at build time) keeps it sized as the crawl
+    grows: ``m`` is rounded up to a power of two, so the derived
+    geometry is stable until the count crosses the next sizing
+    boundary, at which point the ``_STATE`` marker mismatch forces one
+    rebuild with doubled ``m`` — amortized-doubling growth, O(log)
+    rebuilds over a crawl's life, never silent saturation."""
+    nb = cfg.seen_partitions
+    target = max(cfg.prefilter_min_seen, int(n_seen))
     per_bucket = max(1024, target // max(nb, 1))
     m = 1 << max(8, math.ceil(math.log2(per_bucket / 4 / 0.84)))
     return CuckooConfig(n_buckets=nb, m=m, b=4, fbits=16)
 
 
 def _cuckoo_dir(catalog: Catalog) -> str:
-    import os
-
     return os.path.join(catalog.root, "cuckoo_parts")
 
 
-def _cuckoo_marker(ccfg, round_no: int) -> dict:
+def _cuckoo_marker(ccfg: CuckooConfig, round_no: int) -> dict:
     return {
         "round": round_no,
         "m": ccfg.m,
@@ -633,9 +288,6 @@ def _cuckoo_marker(ccfg, round_no: int) -> dict:
 
 
 def _cuckoo_state_read(catalog: Catalog):
-    import json
-    import os
-
     try:
         with open(os.path.join(_cuckoo_dir(catalog), "_STATE")) as f:
             return json.load(f)
@@ -643,24 +295,20 @@ def _cuckoo_state_read(catalog: Catalog):
         return None
 
 
-def _write_cuckoo_state(catalog: Catalog, round_no: int, ccfg) -> None:
-    import json
-    import os
-
+def _write_cuckoo_state(catalog: Catalog, round_no: int, ccfg: CuckooConfig) -> None:
     path = os.path.join(_cuckoo_dir(catalog), "_STATE")
     tmp = path + ".tmp"
     os.makedirs(_cuckoo_dir(catalog), exist_ok=True)
     with open(tmp, "w") as f:
         json.dump(_cuckoo_marker(ccfg, round_no), f)
-    os.replace(tmp, path)
+    os.replace(tmp, path)  # atomic; leading '_' keeps parquet readers away
 
 
 def _invalidate_cuckoo_state(catalog: Catalog) -> None:
-    import contextlib
-    import os
-
-    with contextlib.suppress(OSError):
+    try:
         os.remove(os.path.join(_cuckoo_dir(catalog), "_STATE"))
+    except FileNotFoundError:
+        pass
 
 
 def _ensure_cuckoo(
@@ -672,14 +320,11 @@ def _ensure_cuckoo(
 ) -> DataFrame:
     """Return the cuckoo state at ``round_no``, rebuilding from the
     full committed seen set on marker absence, round drift or a
-    geometry change — the same failure classes that force a bloom
-    rebuild (probing with wrong geometry would manufacture false
-    negatives, which admission exactness cannot absorb).  ``n_seen``
-    (the live seen count) feeds the capacity sizing: when the crawl
-    outgrows the stored geometry the marker comparison fails here and
-    the state rebuilds with doubled ``m`` (see _cuckoo_cfg)."""
-    from .cuckoo import cuckoo_build
-
+    geometry change (probing with wrong geometry would manufacture
+    false negatives, which admission exactness cannot absorb).
+    ``n_seen`` (the live seen count) feeds the capacity sizing: when
+    the crawl outgrows the stored geometry the marker comparison fails
+    here and the state rebuilds with doubled ``m`` (see _cuckoo_cfg)."""
     spark = seen.sparkSession
     ccfg = _cuckoo_cfg(cfg, n_seen)
     if _cuckoo_state_read(catalog) != _cuckoo_marker(ccfg, round_no):
@@ -704,18 +349,23 @@ def _advance_cuckoo(
     """Insert the round's new urls (each url is new-by-construction —
     it passed the exact membership check — so the insert-once caller
     contract of cuckoo_update holds) and commit the marker. Only
-    touched buckets rewrite (dynamic partition overwrite), with the
-    bloom's invalidate-write-stamp crash protocol.  ``n_seen`` must be
-    the SAME value the round's _ensure_cuckoo used (the seen count at
-    round start): updates must run under the stored state's geometry;
-    growth is handled by the NEXT round's ensure/rebuild, never by an
-    in-place geometry change."""
-    from .cuckoo import cuckoo_update
-
+    touched buckets rewrite (dynamic partition overwrite); the changed
+    set is localCheckpoint-ed first because Spark refuses to overwrite
+    a path that appears as a source in the write's own plan.
+    ``n_seen`` must be the SAME value the round's _ensure_cuckoo used
+    (the seen count at round start): updates must run under the
+    stored state's geometry; growth is handled by the NEXT round's
+    ensure/rebuild, never by an in-place geometry change."""
     ccfg = _cuckoo_cfg(cfg, n_seen)
     changed = cuckoo_update(
         state, new_urls, ccfg, changed_only=True
     ).localCheckpoint(eager=True)
+    # Invalidate-then-write-then-stamp (see the crash-safety note
+    # above _cuckoo_cfg): with _STATE gone during the overwrite's
+    # commit window, a crash inside it resolves to a full rebuild on
+    # resume instead of probing a state with a silently-missing bucket
+    # (false negatives ⇒ the exact check is skipped ⇒ duplicate
+    # admissions).
     _invalidate_cuckoo_state(catalog)
     (
         changed.write.mode("overwrite")
@@ -742,8 +392,8 @@ def _check_seen_layout(catalog: Catalog, cfg: CrawlConfig) -> None:
     count is baked into every committed dir name, so a resume with a
     different ``seen_bucket_count``/``seen_partitions`` would probe the
     WRONG buckets — false negatives, duplicate admissions, silent
-    schedule divergence (the same failure class the bloom's ``_STATE``
-    geometry stamp guards against). First bucketed write records the
+    schedule divergence (the same failure class the cuckoo prefilter's
+    ``_STATE`` geometry stamp guards against). First bucketed write records the
     count; every later write and every probe refuses on mismatch."""
     nb = int(cfg.seen_bucket_count or cfg.seen_partitions)
     path = _seen_layout_path(catalog)
@@ -860,8 +510,8 @@ def _membership_width(spark: SparkSession, cfg: CrawlConfig) -> int:
     capped at the task-slot count. A task beyond the slots only queues
     behind the others and adds its fixed cost (scheduling, one more
     output file per checkpoint table), so on a small cluster the cap
-    keeps each round at one wave. ``seen_partitions`` stays the bloom,
-    cuckoo and bucket-layout geometry source; this width is not stamped
+    keeps each round at one wave. ``seen_partitions`` stays the cuckoo
+    and bucket-layout geometry source; this width is not stamped
     anywhere, so it may change between resumes."""
     return min(cfg.seen_partitions, spark.sparkContext.defaultParallelism)
 
@@ -932,9 +582,10 @@ def sweep_revisit(
     that: politeness admits the url again, its re-fetch re-harvests
     links, and any link-rediscovery of the url while it waits in the
     frontier is correctly suppressed by the (unchanged) seen check.
-    The deletion-capable cuckoo prefilter (scheduler/cuckoo.py, q187)
-    exists for the stronger design where the seen set itself revokes
-    entries; this sweep does not need it.
+    The frontier's cuckoo prefilter screens that same unchanged seen
+    set, so the sweep leaves its state untouched and still valid; the
+    filter's deletions (scheduler/cuckoo.py, q187) serve the
+    stronger design where the seen set itself revokes entries.
 
     Idempotent and crash-safe, at THREE levels:
 
@@ -1035,14 +686,6 @@ def run_crawl(
     (``simulate_crawl(..., traps=...)`` mirrors the filter;
     equivalence pinned in test_scheduler.py)."""
     from ..operators.urls import trap_filter
-    if cfg.prefilter not in ("bloom", "cuckoo"):
-        # fail LOUD before any work: a typo would silently run the
-        # bloom path while the caller believes deletion-capable
-        # cuckoo state is being maintained for a later revisit sweep
-        raise ValueError(
-            f"unknown prefilter {cfg.prefilter!r}; "
-            "expected 'bloom' or 'cuckoo'"
-        )
     state = CrawlState()
     member_parts = _membership_width(spark, cfg)
 
@@ -1091,8 +734,9 @@ def run_crawl(
         start_round = 0
 
     # Seen-set cardinality, maintained in the driver across rounds so
-    # bloom-vs-antijoin can be decided without a count job. One count
-    # on (re)start, then updated from each round's n_new.
+    # the prefilter and bucket-probe switches are decided without a
+    # count job. One count on (re)start, then updated from each round's
+    # n_new.
     total_seen = None
 
     for round_no in range(start_round, cfg.max_rounds):
@@ -1172,19 +816,17 @@ def run_crawl(
                 .agg(F.min("depth").alias("depth"))
             )
 
-            # --- seen membership: explicit url repartition + bloom ---------
+            # --- seen membership: explicit url repartition + prefilter ----
             seen = catalog.read_appended("seen", round_no)
-            # Cached: consumed by both bloom branches — without the cache
-            # the link-extraction UDF would re-run once per consumer.
-            # Held in its own variable: the bloom branch rebinds ``cand``,
-            # so unpersisting ``cand`` at round end would release the
-            # derived DF and leak this cache one round at a time.
             if traps is not None:
                 # Trap screen BEFORE membership: a flagged url never
                 # reaches the seen check, is never marked seen, and
                 # re-discovery next round re-screens it (cheap — the
                 # traps side is a broadcast of distinct templates).
                 links = trap_filter(links, traps)
+            # Cached: the harvest count below materializes it and the
+            # membership check reads it back — without the cache the
+            # link-extraction UDF would run twice.
             cached_cand = _by_url(links, member_parts).cache()
             # Materialize the harvest under its OWN timer: the link-
             # extraction UDF + url-hash repartition are lazy, and
@@ -1194,7 +836,6 @@ def run_crawl(
             tp = time.time()
             cached_cand.count()
             phases["harvest"] = round(time.time() - tp, 3)
-            cand = cached_cand
             use_probe = False
             if cfg.membership == "bucket_probe":
                 # Layout validation runs EVERY round in bucket mode —
@@ -1219,48 +860,29 @@ def run_crawl(
                 def _exact_new(c):
                     return _shuffle_anti_join(c, seen, member_parts)
 
-            # Below ``bloom_min_seen`` urls the exact anti-join alone is
-            # cheaper than maintaining/probing the bloom (the bloom's job is
-            # to cut *shuffle* volume, which only matters once seen dwarfs
-            # the candidate batch).
-            bloom_df = None
             cuckoo_df = None
             # Snapshot for the cuckoo geometry: ensure/probe/advance
             # within ONE round must agree on sizing, and total_seen is
             # mutated (+= n_new) before the deferred advance lambda
             # runs — capture the round-start value now.
             seen_at_round_start = total_seen
-            if cfg.use_bloom and total_seen >= cfg.bloom_min_seen:
-                if cfg.prefilter == "cuckoo":
-                    from .cuckoo import cuckoo_probe
-
-                    cuckoo_df = _ensure_cuckoo(
-                        catalog, seen, cfg, round_no, seen_at_round_start
-                    )
-                    # Cached for the same two-consumer reason as the
-                    # partitioned bloom probe below.
-                    probed_cache = cuckoo_probe(
-                        cand, cuckoo_df, _cuckoo_cfg(cfg, seen_at_round_start)
-                    ).cache()
-                    cand = probed_cache
-                elif _bloom_sql_available(spark):
-                    cand = _bloom_prefilter(spark, cand, seen, cfg)
-                else:
-                    bloom_df = _ensure_bloom(catalog, seen, cfg, round_no)
-                    # Cached: the probe output feeds BOTH union branches
-                    # below; uncached, the cogrouped pandas probe subtree
-                    # would execute twice per round (only the exchanges
-                    # under it are reuse-dedupable, not the python stage).
-                    probed_cache = _partitioned_bloom_probe(
-                        cand, bloom_df, cfg
-                    ).cache()
-                    cand = probed_cache
-                definitely_new = cand.where(~F.col("maybe_seen")).drop("maybe_seen")
-                to_check = cand.where(F.col("maybe_seen")).drop("maybe_seen")
-                checked_new = _exact_new(to_check)
-                new_urls = definitely_new.unionByName(checked_new)
+            if total_seen >= cfg.prefilter_min_seen:
+                cuckoo_df = _ensure_cuckoo(
+                    catalog, seen, cfg, round_no, seen_at_round_start
+                )
+                # Cached: the probe output feeds BOTH union branches
+                # below; uncached, the cogrouped pandas probe would
+                # execute twice per round.
+                probed_cache = cuckoo_probe(
+                    cached_cand, cuckoo_df, _cuckoo_cfg(cfg, seen_at_round_start)
+                ).cache()
+                definitely_new = probed_cache.where(~F.col("maybe_seen")).drop(
+                    "maybe_seen"
+                )
+                to_check = probed_cache.where(F.col("maybe_seen")).drop("maybe_seen")
+                new_urls = definitely_new.unionByName(_exact_new(to_check))
             else:
-                new_urls = _exact_new(cand)
+                new_urls = _exact_new(cached_cand)
 
             new_entries = _with_policy_columns(new_urls, robots, host_rank).cache()
 
@@ -1339,23 +961,11 @@ def run_crawl(
                         lambda: catalog.append("results", results, round_no),
                     )
                 )
-            if bloom_df is not None:
-                # Incremental bloom maintenance: only the buckets touched
-                # by this round's new urls are rewritten (dynamic partition
-                # overwrite — O(touched), never O(total bloom)); the state
-                # marker commits after the data inside _advance_bloom.
-                writes.append(
-                    _timed(
-                        "bloom",
-                        lambda: _advance_bloom(
-                            catalog, bloom_df, new_entries.select("url"),
-                            cfg, round_no + 1,
-                        ),
-                    )
-                )
             if cuckoo_df is not None:
-                # Same incremental contract for the cuckoo state:
-                # touched buckets only, marker after data.
+                # Incremental prefilter maintenance: only the buckets
+                # touched by this round's new urls are rewritten; the
+                # state marker commits after the data inside
+                # _advance_cuckoo.
                 writes.append(
                     _timed(
                         "cuckoo",

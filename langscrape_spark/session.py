@@ -36,8 +36,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Catalyst's runtime bloom-filter injection: builds a bloom from
         # the selective side of a shuffle join and pushes it to the other
-        # side's scan — the engine's bloom pre-filter for the seen-set
-        # anti-join (SURVEY.md §4.1) without a hand-rolled filter.
+        # side's scan. It fires for inner and left-semi joins (e.g.
+        # sweep_revisit's join of the due urls against the seen set),
+        # but never for left-anti, so it does NOT pre-filter the
+        # frontier's seen-set anti-join; that screen is the cuckoo
+        # prefilter in scheduler/frontier.py.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -82,7 +82,7 @@ class Catalog:
 
         ``keep``: retain only the newest ``keep`` snapshot versions,
         deleting older ``v*`` dirs after the pointer lands (a per-round
-        snapshot table — frontier, bloom — would otherwise grow by one
+        snapshot table such as the frontier would otherwise grow by one
         full copy every round). Resume needs at most the committed
         round and its successor, so small values are safe."""
         path = self._data_dir(name, version)

@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Long-crawl soak: many politeness rounds to frontier exhaustion,
-with bloom + compaction + GC active — the evidence that no per-round
+with the cuckoo prefilter + compaction + GC active — the evidence that no per-round
 cost term scales with |seen| and that the catalog footprint stays
 bounded over a weeks-long crawl.
 
@@ -9,13 +9,16 @@ Run once per membership strategy and compare the schedule digests:
     python scripts/crawl_soak.py shuffle
     python scripts/crawl_soak.py bucket_probe
 
+A second argument ``dedup`` adds the per-round incremental dedup leg
+(``python scripts/crawl_soak.py shuffle dedup``).
+
 Prints ONE JSON line with the strategy, total urls scheduled, round
 count, an md5 digest over the ordered (round, seq, url) schedule (two
 strategies are admission-identical iff digests match), per-round wall
 times, per-round membership/harvest phase times, and the final catalog
 footprint (dirs + bytes per table). Same corpus shape as the round-2
-34-round soak: 40k pages, 200 seeds, depth 12, bloom forced on from
-round 0, seen compaction every 4 rounds, frontier GC keep=4 (keep is
+34-round soak: 40k pages, 200 seeds, depth 12, cuckoo prefilter forced
+on from round 0, seen compaction every 4 rounds, frontier GC keep=4 (keep is
 run_crawl's default write path).
 """
 
@@ -51,7 +54,6 @@ def _du(path: str) -> int:
 
 def main() -> None:
     membership = sys.argv[1] if len(sys.argv) > 1 else "shuffle"
-    prefilter = sys.argv[2] if len(sys.argv) > 2 else "bloom"
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
     from pyspark.sql import functions as F
@@ -85,11 +87,9 @@ def main() -> None:
             batch_size=BATCH,
             max_depth=MAX_DEPTH,
             max_rounds=MAX_ROUNDS,
-            use_bloom=True,
-            bloom_min_seen=0,  # forced on from round 0
+            prefilter_min_seen=0,  # forced on from round 0
             compact_every=4,
             membership=membership,
-            prefilter=prefilter,
             # the soak's whole point is to exercise the PROBE under
             # maintenance churn: without this, the 200k default floor
             # makes a 40k-page soak silently run the shuffle anti-join
@@ -100,8 +100,8 @@ def main() -> None:
         state = run_crawl(spark, pages, seeds, robots, host_rank, catalog, cfg)
         wall = round(time.perf_counter() - t0, 2)
 
-        # Optional third leg: per-round incremental dedup over the
-        # crawl's own fetched batches (argv[3] == "dedup") — the q210
+        # Optional leg: per-round incremental dedup over the
+        # crawl's own fetched batches (argv[2] == "dedup") — the q210
         # composition at soak scale. Each round's scheduled urls join
         # back to the pages table for text and flow through
         # minhash_ingest_round against ONE accumulated state; the
@@ -110,7 +110,7 @@ def main() -> None:
         # time is reported next to the crawl phases (flatness = the
         # probe never rescans the accumulated state).
         dedup_report = None
-        if len(sys.argv) > 3 and sys.argv[3] == "dedup":
+        if len(sys.argv) > 2 and sys.argv[2] == "dedup":
             from langscrape_spark.operators.dedup import (
                 grouped_bucket_pairs,
                 minhash_band_buckets,
@@ -178,7 +178,7 @@ def main() -> None:
             .encode()
         ).hexdigest()
         footprint = {}
-        for t in ("seen", "frontier", "schedule", "bloom", "metrics"):
+        for t in ("seen", "frontier", "schedule", "cuckoo_parts", "metrics"):
             p = os.path.join(tmp, "catalog", t)
             if os.path.isdir(p):
                 footprint[t] = {
@@ -191,7 +191,6 @@ def main() -> None:
             json.dumps(
                 {
                     "membership": membership,
-                    "prefilter": prefilter,
                     "n_pages": N_PAGES,
                     "rounds": len(state.metrics),
                     "urls_scheduled": len(sched),

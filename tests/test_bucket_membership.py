@@ -3,7 +3,8 @@
 url-hash bucket and the per-round exact check direct-reads only each
 task's bucket files — no seen-side shuffle. These tests pin that the
 strategy is admission-IDENTICAL to the shuffle anti-join (and so to
-the sequential simulator), through compaction, bloom, and resume.
+the sequential simulator), through compaction, the cuckoo prefilter,
+and resume.
 """
 
 import pytest
@@ -111,20 +112,6 @@ def test_bucket_probe_with_compaction_matches_simulator(
     assert {r["url"] for r in state.seen.collect()} == sim_seen
 
 
-def test_bucket_probe_with_bloom_matches_simulator(
-    spark, corpus, oracle, tmp_path
-):
-    """Bloom forced on from round 0 on top of the bucket probe: the
-    maybe-seen subset goes through the per-bucket exact check and
-    admission stays simulator-exact."""
-    state, _, _ = _crawl(
-        spark, corpus, tmp_path, bloom_min_seen=0, bloom_bits=1 << 16
-    )
-    sim_schedule, sim_seen = oracle
-    assert _schedule_of(state) == sim_schedule
-    assert {r["url"] for r in state.seen.collect()} == sim_seen
-
-
 def test_bucket_probe_resume_matches_uninterrupted(
     spark, corpus, oracle, tmp_path
 ):
@@ -172,7 +159,7 @@ def test_bucket_probe_rejects_flat_catalog(spark, corpus, tmp_path):
 def test_bucket_probe_geometry_change_refuses(spark, corpus, tmp_path):
     """Resuming a bucket_probe catalog with a DIFFERENT bucket count
     must refuse loudly: probing a mismatched layout would silently
-    re-admit seen urls (the bloom's _STATE guard, for the seen set)."""
+    re-admit seen urls (the prefilter's _STATE guard, for the seen set)."""
     pages, seeds, robots, host_rank = corpus
     catalog = Catalog(spark, str(tmp_path))
     cfg8 = CrawlConfig(
@@ -201,14 +188,10 @@ def test_bucket_layout_with_shuffle_fallback_matches_simulator(
 
 
 def test_cuckoo_prefilter_matches_simulator(spark, corpus, oracle, tmp_path):
-    """prefilter='cuckoo' forced on from round 0: the deletion-capable
-    fingerprint screen replaces the bloom, maybe-seen candidates still
-    route through the exact check, and admission stays simulator-exact
-    — the bloom/cuckoo paths are interchangeable per the north rule."""
-    state, catalog, _ = _crawl(
-        spark, corpus, tmp_path,
-        bloom_min_seen=0, prefilter="cuckoo", bloom_items=100_000,
-    )
+    """Cuckoo prefilter forced on from round 0 on top of the bucket
+    probe: maybe-seen candidates still route through the per-bucket
+    exact check, and admission stays simulator-exact."""
+    state, catalog, _ = _crawl(spark, corpus, tmp_path, prefilter_min_seen=0)
     sim_schedule, sim_seen = oracle
     assert _schedule_of(state) == sim_schedule
     assert {r["url"] for r in state.seen.collect()} == sim_seen
@@ -224,25 +207,33 @@ def test_cuckoo_prefilter_resume_and_geometry_rebuild(
     spark, corpus, oracle, tmp_path
 ):
     """Resume after 3 rounds with a DIFFERENT filter geometry
-    (bloom_items changed): the marker mismatch forces a rebuild from
-    the committed seen set and the crawl still completes
+    (seen_partitions changed, so the filter's shard count changes; the
+    bucket_probe layout is pinned by seen_bucket_count so its own
+    geometry guard does not fire): the marker mismatch forces a rebuild
+    from the committed seen set and the crawl still completes
     simulator-exact — wrong-geometry probing (false negatives) is
     structurally impossible."""
+    import json
+    import os
+
     pages, seeds, robots, host_rank = corpus
     catalog = Catalog(spark, str(tmp_path))
     base = dict(
-        batch_size=BATCH, max_depth=MAX_DEPTH, seen_partitions=8,
-        membership="bucket_probe", probe_min_seen=0,
-        bloom_min_seen=0, prefilter="cuckoo",
+        batch_size=BATCH, max_depth=MAX_DEPTH, seen_bucket_count=8,
+        membership="bucket_probe", probe_min_seen=0, prefilter_min_seen=0,
     )
+    state_path = os.path.join(str(tmp_path), "cuckoo_parts", "_STATE")
     run_crawl(
         spark, pages, seeds, robots, host_rank, catalog,
-        CrawlConfig(max_rounds=3, bloom_items=100_000, **base),
+        CrawlConfig(max_rounds=3, seen_partitions=8, **base),
     )
+    assert json.load(open(state_path))["buckets"] == 8
     state = run_crawl(
         spark, pages, seeds, robots, host_rank, catalog,
-        CrawlConfig(max_rounds=MAX_ROUNDS, bloom_items=400_000, **base),
+        CrawlConfig(max_rounds=MAX_ROUNDS, seen_partitions=4, **base),
     )
     sim_schedule, sim_seen = oracle
     assert _schedule_of(state) == sim_schedule
     assert {r["url"] for r in state.seen.collect()} == sim_seen
+    st = json.load(open(state_path))
+    assert st["buckets"] == 4 and st["round"] == catalog.committed_round()

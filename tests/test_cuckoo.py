@@ -217,11 +217,11 @@ def test_design_load_no_saturation_under_shard_correlation():
 
 def test_cuckoo_cfg_sized_for_activation_threshold():
     """frontier._cuckoo_cfg must size the filter for the seen count
-    at which it ACTIVATES (bloom_min_seen), not just bloom_items —
-    otherwise first activation builds at ~0.95+ nominal load and
-    hard-saturates every shard to all-maybe.  It must also grow with
-    the live seen count (amortized doubling via the _STATE marker
-    rebuild)."""
+    at which it ACTIVATES (prefilter_min_seen), with one shard per
+    seen partition — otherwise first activation builds at ~0.95+
+    nominal load and hard-saturates every shard to all-maybe.  It must
+    also grow with the live seen count (amortized doubling via the
+    _STATE marker rebuild)."""
     from langscrape_spark.scheduler.frontier import (
         CrawlConfig,
         _cuckoo_cfg,
@@ -230,8 +230,14 @@ def test_cuckoo_cfg_sized_for_activation_threshold():
 
     cfg = CrawlConfig()
     base = _cuckoo_cfg(cfg)
+    # the default geometry is pinned: a changed stamp would force every
+    # existing catalog's filter through a full rebuild on resume
+    assert _cuckoo_marker(base, 3) == {
+        "round": 3, "m": 32768, "b": 4, "fbits": 16, "buckets": 32, "i1v": 2,
+    }
+    assert base.n_buckets == cfg.seen_partitions
     # capacity at <=0.84 load must cover the activation threshold
-    target = max(cfg.bloom_items, cfg.bloom_min_seen)
+    target = cfg.prefilter_min_seen
     capacity = base.n_buckets * base.m * base.b
     assert target / capacity <= 0.84, (
         f"nominal load {target / capacity:.2f} at first activation"

@@ -1,4 +1,4 @@
-"""Hardening gates: bloom-path exactness, salting invariance,
+"""Hardening gates: seen-set prefilter exactness, salting invariance,
 physical-plan shape regressions, pdf routing, crash-mid-round resume."""
 
 import os
@@ -10,6 +10,7 @@ from langscrape_spark import synth
 from langscrape_spark.scheduler import frontier as frontier_mod
 from langscrape_spark.scheduler.frontier import (
     CrawlConfig,
+    _cuckoo_state_read,
     _politeness_admit,
     _with_policy_columns,
     run_crawl,
@@ -63,49 +64,32 @@ def _run(spark, corpus, tmpdir, **cfg_kwargs):
 
 
 def test_bloom_path_is_exact(spark, corpus, oracle, tmp_path):
-    """With the bloom pre-filter FORCED on (min-seen floor 0), the
-    schedule and seen-set must be byte-identical to the simulator —
-    bloom false positives fall through to the exact anti-join. Runs
-    whichever bloom backend this build resolves (SQL bloom_filter_agg
-    or the numpy-bitset pandas-UDF fallback)."""
-    state, _ = _run(spark, corpus, tmp_path / "bloom", bloom_min_seen=0)
+    """With the cuckoo seen-set prefilter FORCED on (min-seen floor 0)
+    under the shuffle membership, the schedule and seen-set must be
+    byte-identical to the simulator — the screen's false positives
+    fall through to the exact anti-join. The filter state must also
+    (a) advance its marker with the rounds, (b) keep exactly ONE copy
+    on disk (bucket-partitioned dir, dynamic overwrite — no version
+    accumulation) and (c) hold every seen url (no false negatives)."""
+    from langscrape_spark.scheduler.cuckoo import CuckooConfig, cuckoo_probe
+    from langscrape_spark.scheduler.frontier import _cuckoo_dir
+
+    state, catalog = _run(spark, corpus, tmp_path / "cuckoo", prefilter_min_seen=0)
     sim_schedule, sim_seen = oracle
     got = [(r["round"], r["seq"], r["url"])
            for r in state.schedule.orderBy("round", "seq").collect()]
     assert got == sim_schedule
     assert {r["url"] for r in state.seen.collect()} == sim_seen
-
-
-def test_partitioned_bloom_incremental_and_gc(spark, corpus, tmp_path, monkeypatch):
-    """With the bloom forced on, the partitioned bloom must (a) advance
-    its state marker with the rounds via incremental merges, (b) keep
-    exactly ONE copy on disk (bucket-partitioned dir, dynamic
-    overwrite — no version accumulation), and (c) contain every seen
-    url (zero false negatives by probe). The SQL-bloom detection is
-    pinned off so the partitioned path runs on any Spark build."""
-    monkeypatch.setattr(frontier_mod, "_BLOOM_SQL_AVAILABLE", False)
-    state, catalog = _run(spark, corpus, tmp_path / "pbloom", bloom_min_seen=0)
-    assert state.rounds_run >= 3
-    from langscrape_spark.scheduler.frontier import (
-        CrawlConfig,
-        _bloom_dir,
-        _bloom_state,
-        _partitioned_bloom_probe,
-    )
-
-    st = _bloom_state(catalog)
-    assert st is not None and st["round"] == catalog.committed_round()
-    # one copy: only bucket=K partition dirs (plus marker/_SUCCESS)
+    st = _cuckoo_state_read(catalog)
+    assert st["round"] == catalog.committed_round()
     entries = [
-        d for d in os.listdir(_bloom_dir(catalog))
+        d for d in os.listdir(_cuckoo_dir(catalog))
         if not d.startswith(("_", "."))  # markers + checksum files
     ]
     assert entries and all(d.startswith("bucket=") for d in entries)
-    # probe the full seen set against the final bloom: all must hit
-    cfg = CrawlConfig(seen_partitions=8, bloom_min_seen=0)
-    seen = catalog.read_appended("seen")
-    probed = _partitioned_bloom_probe(
-        seen, spark.read.parquet(_bloom_dir(catalog)), cfg
+    ccfg = CuckooConfig(n_buckets=st["buckets"], m=st["m"], b=st["b"], fbits=st["fbits"])
+    probed = cuckoo_probe(
+        state.seen, spark.read.parquet(_cuckoo_dir(catalog)), ccfg
     )
     assert probed.where(~F.col("maybe_seen")).count() == 0
 
@@ -382,105 +366,48 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_partitioned_bloom_merge_equals_rebuild(spark, tmp_path):
-    """Incremental merge is exact: OR-ing each round's new positions
-    into the stored bitsets must produce byte-identical bitsets to a
-    from-scratch build over the full url set (positions are
-    deterministic, OR is associative) — no drift over rounds."""
-    from langscrape_spark.scheduler.frontier import (
-        CrawlConfig,
-        _build_bloom_df,
-        _merge_bloom_df,
-    )
-
-    cfg = CrawlConfig(seen_partitions=4, bloom_bits=4096)
-    batches = [
-        [(synth.url_of(i),) for i in range(lo, lo + 40)]
-        for lo in (0, 40, 80)
-    ]
-    dfs = [spark.createDataFrame(b, "url string") for b in batches]
-    merged = _build_bloom_df(dfs[0], cfg)
-    for nxt in dfs[1:]:
-        merged = _merge_bloom_df(merged, nxt, cfg)
-    rebuilt = _build_bloom_df(
-        dfs[0].unionByName(dfs[1]).unionByName(dfs[2]), cfg
-    )
-    m = {r["bucket"]: bytes(r["bits"]) for r in merged.collect()}
-    b = {r["bucket"]: bytes(r["bits"]) for r in rebuilt.collect()}
-    assert m == b and len(m) > 0
-
-
 def test_bloom_active_kill_and_resume(spark, corpus, oracle, tmp_path):
-    """Kill after 3 rounds WITH the partitioned bloom forced on, then
-    resume to completion: the bloom table must resume from its
-    committed version (no false negatives sneak in across the restart)
+    """Kill after 3 rounds WITH the cuckoo prefilter forced on, then
+    resume to completion: the filter state must resume from its
+    committed round (no false negatives sneak in across the restart)
     and the final schedule/seen-set still match the simulator."""
-    catdir = tmp_path / "bloomresume"
-    _run(spark, corpus, catdir, max_rounds=3, bloom_min_seen=0)
-    state, catalog = _run(spark, corpus, catdir, bloom_min_seen=0)
+    catdir = tmp_path / "cuckooresume"
+    _run(spark, corpus, catdir, max_rounds=3, prefilter_min_seen=0)
+    state, catalog = _run(spark, corpus, catdir, prefilter_min_seen=0)
     sim_schedule, sim_seen = oracle
     got = [(r["round"], r["seq"], r["url"])
            for r in state.schedule.orderBy("round", "seq").collect()]
     assert got == sim_schedule
     assert {r["url"] for r in state.seen.collect()} == sim_seen
-    from langscrape_spark.scheduler.frontier import _bloom_state
-
-    assert _bloom_state(catalog)["round"] == catalog.committed_round()
-
-
-def test_bloom_geometry_change_forces_rebuild(spark, corpus, oracle, tmp_path, monkeypatch):
-    """Resuming with a DIFFERENT bloom geometry (bits/buckets) must
-    rebuild the bloom rather than probe a mismatched bitset — probing
-    with the wrong modulus yields false negatives, i.e. re-admission
-    of seen urls (review finding r2). The resumed crawl must still be
-    simulator-exact."""
-    monkeypatch.setattr(frontier_mod, "_BLOOM_SQL_AVAILABLE", False)
-    catdir = tmp_path / "geom"
-    _run(spark, corpus, catdir, max_rounds=3, bloom_min_seen=0,
-         seen_partitions=8)
-    # resume with doubled per-bucket bits and a different bucket count
-    state, catalog = _run(
-        spark, corpus, catdir, bloom_min_seen=0,
-        seen_partitions=8, bloom_bits=16384, bloom_buckets=4,
-    )
-    from langscrape_spark.scheduler.frontier import _bloom_state
-
-    st = _bloom_state(catalog)
-    assert st["bits"] == 16384 and st["buckets"] == 4
-    sim_schedule, sim_seen = oracle
-    got = [(r["round"], r["seq"], r["url"])
-           for r in state.schedule.orderBy("round", "seq").collect()]
-    assert got == sim_schedule
-    assert {r["url"] for r in state.seen.collect()} == sim_seen
+    assert _cuckoo_state_read(catalog)["round"] == catalog.committed_round()
 
 
 def test_bloom_crash_inside_merge_overwrite_forces_rebuild(
     spark, corpus, oracle, tmp_path, monkeypatch
 ):
-    """ADVICE r2 (medium): dynamic partition overwrite deletes each
-    matched bucket dir before renaming staged files at job commit, so a
-    kill INSIDE that commit window leaves a bucket missing — a false-
-    NEGATIVE source, not a superset. The fix invalidates _STATE before
-    the merge write; this test kills the real ``_advance_bloom`` inside
-    its parquet write (after one bucket dir is already gone) and checks
-    (a) the state marker is absent at crash time — so resume cannot
-    trust the torn bloom — and (b) the resumed crawl rebuilds and stays
-    simulator-exact."""
+    """Dynamic partition overwrite deletes each matched bucket dir
+    before renaming staged files at job commit, so a kill INSIDE that
+    commit window leaves a bucket missing — a false-NEGATIVE source,
+    not a superset. ``_advance_cuckoo`` invalidates _STATE before its
+    overwrite; this test kills the real overwrite (after one bucket dir
+    is already gone) and checks (a) the state marker is absent at crash
+    time — so resume cannot trust the torn filter — and (b) the resumed
+    crawl rebuilds and stays simulator-exact."""
     import glob
+    import inspect
     import shutil
 
     from pyspark.sql.readwriter import DataFrameWriter
 
-    monkeypatch.setattr(frontier_mod, "_BLOOM_SQL_AVAILABLE", False)
-    catdir = tmp_path / "mergecrash"
+    catdir = tmp_path / "advancecrash"
     orig_parquet = DataFrameWriter.parquet
     armed = {"on": True}
 
     def bomb(self, path, *a, **kw):
         if (
             armed["on"]
-            and str(path).endswith("bloom_parts")
-            and glob.glob(str(path) + "/bucket=*")
+            and str(path).endswith("cuckoo_parts")
+            and any(f.function == "_advance_cuckoo" for f in inspect.stack(0))
         ):
             armed["on"] = False
             victim = sorted(glob.glob(str(path) + "/bucket=*"))[0]
@@ -490,23 +417,20 @@ def test_bloom_crash_inside_merge_overwrite_forces_rebuild(
 
     monkeypatch.setattr(DataFrameWriter, "parquet", bomb)
     with pytest.raises(RuntimeError, match="simulated kill"):
-        _run(spark, corpus, catdir, bloom_min_seen=0)
-    assert not armed["on"], "merge write was never reached"
+        _run(spark, corpus, catdir, prefilter_min_seen=0)
+    assert not armed["on"], "advance write was never reached"
 
-    from langscrape_spark.scheduler.frontier import _bloom_state
-
-    _, catalog0 = None, Catalog(spark, str(catdir))
     # the commit-window invariant: no state marker may exist while the
-    # bloom data is torn (a bucket dir is genuinely missing right now)
-    assert _bloom_state(catalog0) is None
+    # filter data is torn (a bucket dir is genuinely missing right now)
+    assert _cuckoo_state_read(Catalog(spark, str(catdir))) is None
 
-    state, catalog = _run(spark, corpus, catdir, bloom_min_seen=0)
+    state, catalog = _run(spark, corpus, catdir, prefilter_min_seen=0)
     sim_schedule, sim_seen = oracle
     got = [(r["round"], r["seq"], r["url"])
            for r in state.schedule.orderBy("round", "seq").collect()]
     assert got == sim_schedule
     assert {r["url"] for r in state.seen.collect()} == sim_seen
-    assert _bloom_state(catalog)["round"] == catalog.committed_round()
+    assert _cuckoo_state_read(catalog)["round"] == catalog.committed_round()
 
 
 def test_distributed_cumsum_plan_never_single_partitions_the_corpus(spark):

@@ -6262,32 +6262,6 @@ class TestReviewRegressions2:
         }
         assert out == {"h1": (5, 1), "h2": (3, 1)}
 
-    def test_prefilter_typo_fails_loud(self, spark, tmp_path):
-        from langscrape_spark.scheduler.frontier import (
-            CrawlConfig,
-            run_crawl,
-        )
-        from langscrape_spark.sources.catalog import Catalog
-        from langscrape_spark import synth
-
-        pages = spark.createDataFrame([], "url string, html string")
-        seeds = spark.createDataFrame(
-            [(synth.url_of(0), 0)], "url string, depth int"
-        )
-        robots = spark.createDataFrame(
-            [],
-            "host string, disallow array<string>, "
-            "crawl_delay double, allowed boolean",
-        )
-        rank = spark.createDataFrame([], "host string, rank double")
-        # validation fires at entry, BEFORE any seeding/catalog work
-        with pytest.raises(ValueError, match="unknown prefilter"):
-            run_crawl(
-                spark, pages, seeds, robots, rank,
-                Catalog(spark, str(tmp_path)),
-                CrawlConfig(max_rounds=1, prefilter="Cuckoo "),
-            )
-
 
 # ---------------------------------------------------------------------------
 # Average Precision (q202)
