@@ -1,23 +1,17 @@
 from .kernel import (
-    clean_html_udf,
     extract_links_udf,
     html_to_text_udf,
     is_pdf_col,
     make_extract_fields_udf,
     normalize_url_udf,
-    pdf_text_udf,
-    url_host_udf,
     valid_url_col,
 )
 
 __all__ = [
-    "clean_html_udf",
     "extract_links_udf",
     "html_to_text_udf",
     "is_pdf_col",
     "make_extract_fields_udf",
     "normalize_url_udf",
-    "pdf_text_udf",
-    "url_host_udf",
     "valid_url_col",
 ]

@@ -26,22 +26,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..html.clean import clean_for_extraction, clean_html_for_extraction
+from ..html.clean import clean_for_extraction
 from ..html.dom import parse
 from ..html.extract import SENTINEL_NO_STORED, extract_by_xpath_map
-from ..html.links import extract_links, links_of, normalize_url, url_host
+from ..html.links import extract_links, links_of, normalize_url
 from ..html.textify import html_to_text, pdf_text_normalizer
 
 __all__ = [
-    "clean_html_udf",
     "extract_links_udf",
     "fetch_page",
     "html_to_text_udf",
     "make_fetch_kernel_udf",
     "make_extract_fields_udf",
-    "pdf_text_udf",
     "normalize_url_udf",
-    "url_host_udf",
 ]
 
 
@@ -57,48 +54,10 @@ def _to_str(value: Any) -> str:
 
 
 @pandas_udf(StringType())
-def clean_html_udf(html: pd.Series) -> pd.Series:
-    """``clean_html_for_extraction3`` semantics per row
-    (reference langscrape/html/utils.py:91-103)."""
-    return html.map(lambda v: clean_html_for_extraction(_to_str(v)))
-
-
-@pandas_udf(StringType())
 def html_to_text_udf(html: pd.Series) -> pd.Series:
     """Derives the ``text`` column from ``html``
     (reference feilian/text_tools.py:6-48 composition)."""
     return html.map(lambda v: html_to_text(_to_str(v)))
-
-
-def make_clean_extract_udf(field_map: Dict[str, Dict[str, Any]]):
-    """Fused kernel: ``html:binary -> struct<cleaned:string,
-    extracted:map<string,array<string>>>`` in ONE Arrow crossing.
-
-    Semantically identical to ``clean_html_udf`` followed by
-    ``make_extract_fields_udf`` (the extractor still operates on the
-    *cleaned string*, reference langscrape/html/xpath_extractor.py:57),
-    but halves the JVM↔Python serialization: with two chained UDFs the
-    raw html crosses to Python, the cleaned html crosses back to the
-    JVM only to immediately cross into Python again. At 32 cores that
-    JVM-side Arrow traffic competes with the Python workers for the
-    same cores and caps scaling."""
-    frozen = {k: dict(v) for k, v in field_map.items()}
-    out_type = StructType(
-        [
-            StructField("cleaned", StringType()),
-            StructField(
-                "extracted", MapType(StringType(), ArrayType(StringType()))
-            ),
-        ]
-    )
-
-    @pandas_udf(out_type)
-    def clean_extract_udf(html: pd.Series) -> pd.DataFrame:
-        cleaned = html.map(lambda v: clean_html_for_extraction(_to_str(v)))
-        extracted = cleaned.map(lambda v: extract_by_xpath_map(v, frozen))
-        return pd.DataFrame({"cleaned": cleaned, "extracted": extracted})
-
-    return clean_extract_udf
 
 
 def make_extract_fields_udf(field_map: Dict[str, Dict[str, Any]]):
@@ -128,7 +87,13 @@ def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
 
 
 def _pdf_text(v: Any) -> str:
-    """One pdf row's text: the body of ``pdf_text_udf``."""
+    """One pdf row's text (reference langscrape/pdf/pdf_utils.py:22-34).
+
+    pymupdf is not available in this environment; the *plumbing*
+    (binary column in → normalized text out, ``endswith(url, '.pdf')``
+    routing) is real, the decode step is a deterministic fallback:
+    latin-1-decode printable bytes then apply the reference's
+    ``text_normalizer``. Swap the decode for pymupdf in production."""
     if v is None:
         return ""
     raw = bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode()
@@ -143,24 +108,15 @@ def _pdf_text(v: Any) -> str:
     return pdf_text_normalizer(text)
 
 
-@pandas_udf(StringType())
-def pdf_text_udf(body: pd.Series) -> pd.Series:
-    """PDF → text route (reference langscrape/pdf/pdf_utils.py:22-34).
-
-    pymupdf is not available in this environment; the *plumbing*
-    (binary column in → normalized text out, ``when(endswith(url,
-    '.pdf'))`` routing) is real, the decode step is a deterministic
-    fallback: latin-1-decode printable bytes then apply the reference's
-    ``text_normalizer``. Swap ``_pdf_text``'s decode for pymupdf in
-    production."""
-    return body.map(_pdf_text)
-
-
 def fetch_page(
-    html: Any, base_url: Any, is_pdf: bool, field_map: Dict[str, Dict[str, Any]]
+    html: Any,
+    base_url: Any,
+    is_pdf: bool,
+    field_map: Dict[str, Dict[str, Any]],
+    harvest: bool = True,
 ) -> Tuple[List[str], str, Dict[str, List[str]]]:
     """One fetched page → ``(links, cleaned, extracted)``, the row of the
-    crawl's fused fetch kernel.
+    fused fetch kernel.
 
     An html page is parsed ONCE: its out-links are harvested from the
     tree first (``links_of`` only reads it), then the same tree is
@@ -168,30 +124,35 @@ def fetch_page(
     three values equal ``extract_links(html, url)``,
     ``clean_html_for_extraction(html)`` and
     ``extract_by_xpath_map(cleaned, field_map)`` by construction. A pdf
-    page takes the pdf route of ``extract_pages`` (``pdf_text_udf``'s
-    text, the no-stored-value sentinel in every field) and its links
-    are harvested from its bytes, as the link-only harvest does."""
+    page takes the pdf route (``_pdf_text``, the no-stored-value
+    sentinel in every field; reference
+    langscrape/html/xpath_extractor.py:63-66) and its links are
+    harvested from its bytes, as the link-only harvest does. With
+    ``harvest=False`` no link is harvested and ``links`` is empty."""
     url = base_url if isinstance(base_url, str) else ""
     if is_pdf:
         return (
-            extract_links(_to_str(html), url),
+            extract_links(_to_str(html), url) if harvest else [],
             _pdf_text(html),
             {k: [SENTINEL_NO_STORED] for k in field_map},
         )
     doc = parse(_to_str(html))
-    links = links_of(doc, url)
+    links = links_of(doc, url) if harvest else []
     cleaned = clean_for_extraction(doc)
     return links, cleaned, extract_by_xpath_map(cleaned, field_map)
 
 
-def make_fetch_kernel_udf(field_map: Dict[str, Dict[str, Any]]):
-    """The crawl round's fused fetch kernel: ``(html:binary, url:string,
+def make_fetch_kernel_udf(field_map: Dict[str, Dict[str, Any]], harvest: bool = True):
+    """The fused fetch kernel: ``(html:binary, url:string,
     is_pdf:boolean) -> struct<links:array<string>, cleaned:string,
-    extracted:map<string,array<string>>>``, one ``fetch_page`` per row.
+    extracted:map<string,array<string>>>``, one ``fetch_page(...,
+    harvest)`` per row. The crawl's fetch harvests links; the bulk
+    ``extract_pages`` does not (``harvest=False``, empty ``links``).
 
     The link harvest and clean+extract share one crossing and one parse
-    per page. Pdf rows ride the same pass: a filter-split would scan the
-    pages table once per route and run twice the Python tasks."""
+    per page, and the raw html crosses into Python once. Pdf rows ride
+    the same pass: a filter-split would scan the pages table once per
+    route and run twice the Python tasks."""
     frozen = {k: dict(v) for k, v in field_map.items()}
     out_type = StructType(
         [
@@ -208,7 +169,7 @@ def make_fetch_kernel_udf(field_map: Dict[str, Dict[str, Any]]):
         html: pd.Series, url: pd.Series, is_pdf: pd.Series
     ) -> pd.DataFrame:
         rows = [
-            fetch_page(h, u, bool(p), frozen)
+            fetch_page(h, u, bool(p), frozen, harvest)
             for h, u, p in zip(html, url, is_pdf)
         ]
         return pd.DataFrame(
@@ -226,11 +187,6 @@ def make_fetch_kernel_udf(field_map: Dict[str, Dict[str, Any]]):
 def normalize_url_udf(url: pd.Series) -> pd.Series:
     """Canonical URL for seen-set identity (html/links.py)."""
     return url.map(lambda u: normalize_url(u) if isinstance(u, str) else None)
-
-
-@pandas_udf(StringType())
-def url_host_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: url_host(u) if isinstance(u, str) else None)
 
 
 def is_pdf_col(url_col):

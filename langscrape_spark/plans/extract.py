@@ -4,17 +4,20 @@ Spark-first restatement of the reference's per-URL LangGraph pipeline
 (``/root/reference/langscrape/agent/graph.py:27-60``; lifecycle in
 SURVEY.md §3.1): the sequential per-URL for-loop becomes partition
 parallelism; fetch becomes a table scan; the ReAct XPath loop becomes a
-fixed field-map; everything except the two kernel UDFs is JVM-side
-whole-stage-codegen expressions.
+fixed field-map; everything except the one fused kernel UDF
+(``make_fetch_kernel_udf``) is JVM-side whole-stage-codegen
+expressions.
 
 Stage map (reference node → here):
 - ``url_handler`` validate/route  → ``valid_url_col`` / ``is_pdf_col``
-  predicates (``langscrape/nodes/url_handler.py:19-26``);
-- ``clean_html_for_extraction3``  → ``clean_html_udf``;
+  predicates (``langscrape/nodes/url_handler.py:19-26``); pdf rows
+  take ``kernel._pdf_text`` inside the same kernel pass;
+- ``clean_html_for_extraction3``  → ``kernel.fetch_page``'s clean step
+  (``clean_for_extraction``);
 - min-HTML-length gate (3000)     → ``too_short_html`` provenance flag
   (``url_handler.py:14-17,38-43``) — a flag, not a refetch;
 - ``feature_binder`` final extract + min-body gate (100) →
-  ``extract_fields_udf`` + ``too_short_body``
+  ``fetch_page``'s ``extract_by_xpath_map`` + ``too_short_body``
   (``langscrape/nodes/feature_binder.py:12-40``);
 - newspaper4k fallback            → excluded (live network);
   ``traditional_flag`` kept as an always-empty array for schema parity
@@ -31,13 +34,7 @@ from typing import Any, Dict, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.kernel import (
-    is_pdf_col,
-    make_clean_extract_udf,
-    make_fetch_kernel_udf,
-    pdf_text_udf,
-    valid_url_col,
-)
+from ..functions.kernel import is_pdf_col, make_fetch_kernel_udf, valid_url_col
 
 MIN_HTML_LENGTH = 3000  # reference config/default_config.yaml:35-36
 MIN_ARTICLE_BODY = 100  # reference config/default_config.yaml:38-39
@@ -58,20 +55,35 @@ RESULT_COLUMNS = (
 )
 
 
-def _routed(pages: DataFrame) -> DataFrame:
+def _kernel(
+    pages: DataFrame, field_map: Dict[str, Dict[str, Any]], harvest: bool
+) -> DataFrame:
+    """``pages`` plus the routing flags, ``host`` and the fused kernel's
+    struct ``_kernel`` (``links``, ``cleaned``, ``extracted``), from ONE
+    Python pass.
+
+    PDF routing (reference is_pdf_condition, langscrape/agent/
+    graph.py:13-17) happens per row inside the kernel, not as a
+    filter-split + union: a split scans the pages once per route and
+    runs a Python stage per route, and a ``when()`` over two UDFs would
+    run both on every row. The kernel's flag is coalesced: a NULL url
+    yields NULL ``is_pdf``; its row takes the html route and is flagged
+    ``is_valid_url=false``, never dropped."""
+    kernel_udf = make_fetch_kernel_udf(field_map, harvest=harvest)
     return (
         pages
         .withColumn("is_valid_url", valid_url_col(F.col("url")))
         .withColumn("is_pdf", is_pdf_col(F.col("url")))
         .withColumn("host", F.lower(F.try_parse_url(F.col("url"), F.lit("HOST"))))
+        .withColumn(
+            "_kernel",
+            kernel_udf(
+                F.col("html"),
+                F.col("url"),
+                F.coalesce(F.col("is_pdf"), F.lit(False)),
+            ),
+        )
     )
-
-
-def _pdf_flag():
-    # coalesce: a NULL url yields NULL is_pdf, and ~NULL / NULL fail
-    # *both* WHEREs of a filter-split — the row would silently vanish.
-    # Poison rows are flagged (is_valid_url=false), never dropped.
-    return F.coalesce(F.col("is_pdf"), F.lit(False))
 
 
 def _finish(df: DataFrame, field_map: Dict[str, Dict[str, Any]]) -> DataFrame:
@@ -111,41 +123,12 @@ def extract_pages(
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extraction results.
 
-    Each route runs one Python stage with ONE Arrow crossing: html rows
-    run clean+extract fused in a single pandas UDF
-    (``make_clean_extract_udf``) — semantics are byte-identical to
-    running them separately (the extractor still parses the cleaned
-    *string*), but the raw html is serialized to Python exactly once
-    instead of html→py, cleaned→jvm, cleaned→py; pdf rows run
-    ``pdf_text_udf``.
-    """
-    kernel_udf = make_clean_extract_udf(field_map)
-    base = _routed(pages)
-    # PDF routing (reference is_pdf_condition, langscrape/agent/
-    # graph.py:13-17): pdf rows take the pdf-text path, html rows the
-    # clean+extract kernel. A filter-split + union, NOT a when() over
-    # both UDFs — Spark evaluates UDFs in both branches of a when(),
-    # which would run the html kernel on every pdf and vice versa.
-    pdf_flag = _pdf_flag()
-    html_rows = base.where(~pdf_flag).withColumn(
-        "_kernel", kernel_udf(F.col("html"))
-    )
-    pdf_rows = base.where(pdf_flag).withColumn(
-        "_kernel",
-        F.struct(
-            pdf_text_udf(F.col("html")).alias("cleaned"),
-            # pdf route has no xpath extraction: every configured field
-            # carries the reference's no-stored-value sentinel
-            # (langscrape/html/xpath_extractor.py:63-66).
-            F.map_from_arrays(
-                F.array(*[F.lit(k) for k in field_map.keys()]),
-                F.array(
-                    *[F.array(F.lit("(No stored value)")) for _ in field_map]
-                ),
-            ).alias("extracted"),
-        ),
-    )
-    df = _finish(html_rows.unionByName(pdf_rows), field_map)
+    One scan of ``pages`` and one Python stage with ONE Arrow crossing:
+    the fused fetch kernel (``make_fetch_kernel_udf``, link harvest
+    off) cleans and extracts html rows and takes pdf rows' text, row by
+    row. Row for row it equals the crawl's ``extract_and_harvest``
+    without ``links``."""
+    df = _finish(_kernel(pages, field_map, harvest=False), field_map)
     cols = list(RESULT_COLUMNS)
     if keep_cleaned:
         cols.insert(10, "cleaned")
@@ -166,10 +149,9 @@ def extract_and_harvest(
     inside the same pass, so the input is scanned once and crosses into
     Python once. Row for row, the result columns equal
     ``extract_pages(pages, field_map)``'s."""
-    kernel_udf = make_fetch_kernel_udf(field_map)
-    df = _routed(pages).withColumn(
-        "_kernel", kernel_udf(F.col("html"), F.col("url"), _pdf_flag())
-    ).withColumn("links", F.col("_kernel.links"))
+    df = _kernel(pages, field_map, harvest=True).withColumn(
+        "links", F.col("_kernel.links")
+    )
     return _finish(df, field_map).select(*RESULT_COLUMNS, "links", *carry)
 
 

@@ -10,7 +10,11 @@ sandbox, so this module provides the same *semantics* on plain parquet:
   POSIX) **after** the parquet write succeeds — a crashed round leaves
   the previous version live, so restart-from-checkpoint is exact;
 - re-running a round overwrites its snapshot then re-commits the
-  pointer — idempotent.
+  pointer — idempotent;
+- the pointer also records the schema the version was written with, so
+  a read of that version skips Spark's schema-inference job (one Spark
+  job per read, on the crawl's per-round path). A pointer without one
+  (a catalog written before schemas were recorded) reads by inference.
 
 In production the implementation swaps to Iceberg
 (``df.writeTo(name).overwritePartitions()`` + snapshot rollback);
@@ -27,7 +31,8 @@ import re
 import shutil
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
 
 _MARKER_NAME = re.compile(r"[A-Za-z0-9._-]+")
 
@@ -42,20 +47,44 @@ class Catalog:
     def _pointer_path(self, name: str) -> str:
         return os.path.join(self.root, name, "LATEST")
 
-    def latest_version(self, name: str) -> Optional[int]:
+    def _pointer(self, name: str) -> Optional[dict]:
         try:
             with open(self._pointer_path(name)) as f:
-                return int(json.load(f)["version"])
-        except (OSError, ValueError, KeyError):
+                info = json.load(f)
+            info["version"] = int(info["version"])
+            return info
+        except (OSError, ValueError, KeyError, TypeError):
             return None
 
-    def _commit(self, name: str, version: int) -> None:
+    def latest_version(self, name: str) -> Optional[int]:
+        info = self._pointer(name)
+        return None if info is None else info["version"]
+
+    def _commit(
+        self, name: str, version: int, schema: Optional[StructType] = None
+    ) -> None:
+        """Publish ``version``, recording the ``schema`` it was written
+        with (read back by :meth:`_reader`)."""
         path = self._pointer_path(name)
         os.makedirs(os.path.dirname(path), exist_ok=True)
+        info: dict = {"version": version}
+        if schema is not None:
+            info["schema"] = schema.jsonValue()
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
+            json.dump(info, f)
         os.replace(tmp, path)  # atomic pointer swap
+
+    def _reader(self, name: str, version: int) -> DataFrameReader:
+        """A parquet reader for ``version``, given the schema the pointer
+        recorded when it names that version. Any other version (an older
+        snapshot, a pointer a crashed round moved past the one asked
+        for) or a pointer without a schema reads by inference."""
+        reader = self.spark.read
+        info = self._pointer(name)
+        if info is not None and info["version"] == version and "schema" in info:
+            reader = reader.schema(StructType.fromJson(info["schema"]))
+        return reader
 
     # -- round marker (atomic multi-table commit) ---------------------------
     # A crawl round touches several tables (frontier, seen, schedule,
@@ -87,7 +116,7 @@ class Catalog:
         round and its successor, so small values are safe."""
         path = self._data_dir(name, version)
         df.write.mode("overwrite").parquet(path)
-        self._commit(name, version)
+        self._commit(name, version, df.schema)
         if keep is not None:
             table_dir = os.path.join(self.root, name)
             for d in os.listdir(table_dir):
@@ -133,7 +162,7 @@ class Catalog:
         os.rename(path, old_dir)
         os.rename(new_dir, path)
         shutil.rmtree(old_dir, ignore_errors=True)
-        self._commit(name, version)
+        self._commit(name, version, df.schema)
 
     def _heal_replace(self, name: str, version: int) -> None:
         """Complete a ``write_replace`` interrupted between its two
@@ -210,7 +239,7 @@ class Catalog:
             # that would otherwise leak a snapshot-sized dir each.
             for sib in (path + "__new", path + "__old"):
                 shutil.rmtree(sib, ignore_errors=True)
-        return self.spark.read.parquet(path)
+        return self._reader(name, version).parquet(path)
 
     def append(
         self,
@@ -232,7 +261,7 @@ class Catalog:
         if partition_cols:
             w = w.partitionBy(*partition_cols)
         w.parquet(path)  # idempotent per round
-        self._commit(name, version)
+        self._commit(name, version, df.schema)
 
     # -- delta compaction ---------------------------------------------------
     def _base_path(self, name: str) -> str:
@@ -353,7 +382,11 @@ class Catalog:
     def read_appended(self, name: str, version: Optional[int] = None) -> Optional[DataFrame]:
         """Union of the compacted base (if any) and all committed
         deltas in (base_version, ``version``] (default ``version``:
-        the table's own latest pointer)."""
+        the table's own latest pointer). The deltas and the base of one
+        table share its schema: the pointer's, when it names
+        ``version``."""
+        if version is None:
+            version = self.latest_version(name)
         dirs = self.appended_dirs(name, version)
         if not dirs:
             return None
@@ -364,7 +397,7 @@ class Catalog:
         if any(self._dir_partitioned(d) for d in dirs):
             return self._read_union(dirs)
         try:
-            return self.spark.read.parquet(*dirs)
+            return self._reader(name, version).parquet(*dirs)
         except Exception:
             return self._read_union(dirs)
 

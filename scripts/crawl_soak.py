@@ -15,7 +15,8 @@ A second argument ``dedup`` adds the per-round incremental dedup leg
 Prints ONE JSON line with the strategy, total urls scheduled, round
 count, an md5 digest over the ordered (round, seq, url) schedule (two
 strategies are admission-identical iff digests match), per-round wall
-times, per-round membership/harvest phase times, and the final catalog
+times, per-round membership phase times (they include the link
+harvest, which the membership job materializes), and the final catalog
 footprint (dirs + bytes per table). Same corpus shape as the round-2
 34-round soak: 40k pages, 200 seeds, depth 12, cuckoo prefilter forced
 on from round 0, seen compaction every 4 rounds, frontier GC keep=4 (keep is
@@ -199,10 +200,6 @@ def main() -> None:
                     "round_wall": [m["wall_sec"] for m in state.metrics],
                     "membership_phase": [
                         m.get("phases", {}).get("membership")
-                        for m in state.metrics
-                    ],
-                    "harvest_phase": [
-                        m.get("phases", {}).get("harvest")
                         for m in state.metrics
                     ],
                     "catalog": footprint,

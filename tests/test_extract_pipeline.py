@@ -113,7 +113,9 @@ KERNEL_CASES = [
 
 def test_fetch_page_matches_separate_kernels():
     """Per page, the fused kernel's (links, cleaned, extracted) equal the
-    link harvest, the cleaner and the extractor run separately."""
+    link harvest, the cleaner and the extractor run separately; with the
+    harvest off (extract_pages' kernel), the same cleaned and extracted
+    and no links."""
     from langscrape_spark.functions.kernel import fetch_page
     from langscrape_spark.html.links import extract_links
 
@@ -123,6 +125,10 @@ def test_fetch_page_matches_separate_kernels():
         assert links == extract_links(text, url), url
         assert cleaned == clean_html_for_extraction(text), url
         assert extracted == extract_by_xpath_map(cleaned, synth.FIELD_MAP), url
+        for is_pdf in (False, True):
+            with_links = fetch_page(html, url, is_pdf, synth.FIELD_MAP)
+            without = fetch_page(html, url, is_pdf, synth.FIELD_MAP, harvest=False)
+            assert without == ([], *with_links[1:]), (url, is_pdf)
     fetch_page(None, None, False, synth.FIELD_MAP)  # NULL html and url: no raise
     edge = fetch_page(_HREFS.encode(), "https://edge.example/dir/page", False, {})[0]
     assert edge == [
@@ -181,6 +187,19 @@ def test_extract_and_harvest_scans_pages_once(spark, tmp_path):
     batch = spark.read.parquet(path).join(F.broadcast(admitted), "url", "inner")
     plan = (
         extract_and_harvest(batch, synth.FIELD_MAP, carry=["depth"])
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_extract_pages_scans_pages_once(spark, tmp_path):
+    """extract_pages is one scan of the pages table and one Python stage,
+    pdf route included: no filter-split, no union."""
+    path = str(tmp_path / "pages")
+    synth.build_pages_df(spark, 8, partitions=2).write.parquet(path)
+    plan = (
+        extract_pages(spark.read.parquet(path), synth.FIELD_MAP)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("FileScan parquet") == 1, plan

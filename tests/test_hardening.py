@@ -277,6 +277,36 @@ def test_resume_after_torn_round(spark, corpus, oracle, tmp_path):
     assert "junk.example" not in {r["url"] for r in state2.seen.collect()}
 
 
+def test_final_state_is_the_committed_round(spark, corpus, oracle, tmp_path):
+    """A round whose writes landed but whose commit failed is not part of
+    the crawl: resubmitted up to the committed round, run_crawl returns
+    that round's schedule and seen set, not what the tables' own
+    pointers (one round ahead) name."""
+
+    class CrashAtCommit3(Catalog):
+        def commit_round(self, round_no):
+            if round_no == 3:
+                raise RuntimeError("simulated crash before commit_round(3)")
+            super().commit_round(round_no)
+
+    pages, seeds, robots, host_rank = corpus
+    catdir = str(tmp_path / "uncommitted")
+    cfg = CrawlConfig(batch_size=BATCH, max_depth=3, max_rounds=8, seen_partitions=8)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_crawl(spark, pages, seeds, robots, host_rank, CrashAtCommit3(spark, catdir), cfg)
+
+    state, catalog = _run(spark, corpus, catdir, max_rounds=2)
+    assert catalog.committed_round() == 2
+    assert catalog.latest_version("schedule") == 2  # round 2's writes landed
+    assert catalog.latest_version("seen") == 3
+    ref, _ = _run(spark, corpus, tmp_path / "ref", max_rounds=2)
+    sim_schedule, _sim_seen = oracle
+    got = [(r["round"], r["seq"], r["url"])
+           for r in state.schedule.orderBy("round", "seq").collect()]
+    assert got == [s for s in sim_schedule if s[0] < 2]
+    assert {r["url"] for r in state.seen.collect()} == {r["url"] for r in ref.seen.collect()}
+
+
 def test_lsh_neardup_plans_as_grouped_gemm(spark):
     """q21's scale path must plan as a grouped pandas apply (per-bucket
     gemm), never a join that explodes candidate pairs into rows."""

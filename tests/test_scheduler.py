@@ -172,6 +172,44 @@ def test_metrics_delta_is_one_file_with_the_table_schema(spark, crawl, tmp_path)
     assert catalog.read_appended("metrics").schema == spark.read.parquet(ref).schema
 
 
+def test_catalog_reads_take_the_recorded_schema(spark, tmp_path):
+    """A read of the version a table's pointer names uses the schema
+    recorded when it was written, so ``read`` and ``read_appended`` run
+    no Spark job (no schema inference). A pointer without a recorded
+    schema, as catalogs written before schemas were recorded have,
+    still reads, by inference."""
+    import json
+
+    catalog = Catalog(spark, str(tmp_path / "cat"))
+    rows = [("https://a.example/", 1), ("https://b.example/", 2)]
+    df = spark.createDataFrame(rows, "url string, depth bigint")
+    catalog.write("frontier", df, 0)
+    catalog.append("seen", df.where(F.col("depth") == 1), 0)
+    catalog.append("seen", df.where(F.col("depth") == 2), 1)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-read", "catalog reads")
+    try:
+        frontier = catalog.read("frontier")
+        seen = catalog.read_appended("seen")
+        jobs = list(sc.statusTracker().getJobIdsForGroup("catalog-read"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == []
+    assert frontier.schema.simpleString() == "struct<url:string,depth:bigint>"
+    assert seen.schema == frontier.schema
+    assert sorted(frontier.collect()) == sorted(seen.collect()) == sorted(df.collect())
+
+    for name in ("frontier", "seen"):
+        pointer = os.path.join(catalog.root, name, "LATEST")
+        with open(pointer) as f:
+            version = json.load(f)["version"]
+        with open(pointer, "w") as f:
+            json.dump({"version": version}, f)
+    assert sorted(catalog.read("frontier").collect()) == sorted(df.collect())
+    assert sorted(catalog.read_appended("seen").collect()) == sorted(df.collect())
+
+
 def _plan_nodes(plan):
     """Physical plan nodes, through AQE wrappers, query stages and reused
     exchanges, but not into cached relations (an InMemoryTableScan is a
